@@ -488,7 +488,9 @@ def refresh_aggregate(browser: Any, path: str,
         agg.name: REAGGREGABLE[agg.function] for agg in resolved
     }
 
-    delta = browser.aggregation_dataframe(
+    # the delta is aggregated from the fact star: a registered cuboid
+    # (the one refreshed here, say) has no rows for the new slice yet
+    delta = browser._fact_only().aggregation_dataframe(
         cell=delta_cell, drilldown=drilldown, aggregates=aggregates
     )
     spark = delta.sparkSession

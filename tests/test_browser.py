@@ -317,3 +317,158 @@ def test_register_sql_views_pruned_plan(spark):
     # column pruning reached the scan: no customer/part/order columns
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "c_name" not in plan and "p_brand" not in plan
+
+
+class TestOneActionAggregate:
+    """``aggregate`` runs one Spark action per request: the cells, the
+    total cell count and the summary come back from one ``collect``,
+    and nothing is persisted.  Every answer is checked against an
+    independent computation: the summary against a drilldown-free
+    ``aggregate``, the count and the cells against
+    ``aggregation_dataframe``."""
+
+    @pytest.fixture()
+    def actions(self, spark, monkeypatch):
+        """Counts of DataFrame.collect / count / persist calls."""
+        from collections import Counter
+
+        calls = Counter()
+        cls = type(spark.range(1))
+        for name in ("collect", "count", "persist"):
+            def counted(self, *args, _name=name,
+                        _original=getattr(cls, name), **kwargs):
+                calls[_name] += 1
+                return _original(self, *args, **kwargs)
+            monkeypatch.setattr(cls, name, counted)
+        return calls
+
+    @staticmethod
+    def _expected(browser, cell=None, aggregates=None, drilldown=None,
+                  split=None, order=None, page=None, page_size=None):
+        """(summary, total cell count, cells) computed independently."""
+        summary = browser.aggregate(cell, aggregates=aggregates).summary
+        full = browser.aggregation_dataframe(
+            cell, aggregates, drilldown, split, order)
+        paged = browser.aggregation_dataframe(
+            cell, aggregates, drilldown, split, order, page, page_size)
+        return summary, full.count(), [r.asDict() for r in paged.collect()]
+
+    def _check(self, browser, actions, most=1, **request):
+        want = self._expected(browser, **request)
+        actions.clear()
+        result = browser.aggregate(**request)
+        spent = sum(actions[a] for a in ("collect", "count"))
+        assert 1 <= spent <= most, dict(actions)
+        assert actions["persist"] == 0
+        assert (result.summary, result.total_cell_count,
+                result.cells) == want
+        return result
+
+    @pytest.mark.parametrize("drilldown, cells", [
+        # the drilldown joins no table the summary does not: the
+        # summary is folded from the cells
+        (["date:month", "returnflag"], 36),
+        # customer_geo adds four joins: the summary is its own branch
+        (["customer_geo:region", "returnflag"], 15),
+    ])
+    def test_distributive_drilldown(self, tpch_browser, actions,
+                                    drilldown, cells):
+        r = self._check(
+            tpch_browser, actions, cell="date:1996", drilldown=drilldown,
+            aggregates=["fact_count", "price_sum", "quantity_count",
+                        "price_min", "price_max"])
+        assert r.total_cell_count == len(r.cells) == cells
+
+    def test_avg_and_count_distinct(self, tpch_browser, actions):
+        r = self._check(
+            tpch_browser, actions, drilldown=["date:year"],
+            aggregates=["fact_count", "quantity_avg",
+                        "part_count_distinct"],
+            order=["fact_count:desc"])
+        assert r.summary["quantity_avg"] is not None
+        assert "__summary_row__" not in r.labels
+
+    def test_paginated_customers(self, tpch_browser, actions):
+        r = self._check(
+            tpch_browser, actions, drilldown=["customer_geo:customer"],
+            aggregates=["fact_count", "price_sum"], page=2, page_size=20)
+        assert len(r.cells) == 20 < r.total_cell_count
+        assert "__cell_count__" not in r.labels
+
+    def test_split(self, tpch_browser, actions):
+        r = self._check(
+            tpch_browser, actions, split="date:1995",
+            drilldown=["returnflag"],
+            aggregates=["fact_count", "price_sum"])
+        assert {c["__within_split__"] for c in r.cells} == {False, True}
+
+    def test_calculator(self, tpch_browser, actions):
+        r = self._check(
+            tpch_browser, actions, cell="date:1995",
+            drilldown=["date@ym:month"], aggregates=["price_sma"])
+        assert r.summary["price_sma"] is not None
+        assert all("price_sma" in c for c in r.cells)
+
+    @pytest.mark.parametrize("aggregates", [
+        ["fact_count", "price_sum"],
+        ["fact_count", "price_sum", "quantity_avg"],
+    ])
+    def test_empty_cell(self, tpch_browser, actions, aggregates):
+        r = self._check(tpch_browser, actions, cell="date:1980",
+                        drilldown=["returnflag"], aggregates=aggregates)
+        assert (r.cells, r.total_cell_count) == ([], 0)
+        assert r.summary["fact_count"] == 0
+        assert r.summary["price_sum"] is None
+
+    def test_record_limit_keeps_full_count(self, tpch_browser, actions,
+                                           monkeypatch):
+        monkeypatch.setattr(tpch_browser, "safe_record_limit", 5)
+        request = dict(cell="date:1995", drilldown=["date:month"],
+                       aggregates=["fact_count", "price_sum"])
+        summary, total, cells = self._expected(tpch_browser, **request)
+        actions.clear()
+        r = tpch_browser.aggregate(**request)
+        assert (actions["collect"], actions["count"]) == (1, 0)
+        assert r.summary == summary
+        assert r.total_cell_count == total == 12
+        assert r.cells == cells[:5]
+
+    def test_page_past_the_end(self, tpch_browser, actions):
+        r = self._check(
+            tpch_browser, actions, most=2,
+            drilldown=["customer_geo:customer"],
+            aggregates=["fact_count", "price_sum"], page=1000,
+            page_size=20)
+        assert r.cells == [] and r.total_cell_count > 0
+
+    def test_excluded_null_cells_still_counted(self, spark, actions):
+        from decimal import Decimal
+
+        from tests.conftest import GOLDEN_FACTS, GOLDEN_MODEL
+
+        from cubes_spark.sources.workspace import Workspace
+
+        # every amount of 2011 is NULL, so its amount_sum cell is NULL
+        facts = [(i, y, None if y == 2011 else Decimal(a), p, d)
+                 for i, y, a, p, d in GOLDEN_FACTS]
+        df = spark.createDataFrame(
+            facts, "id long, year long, amount decimal(10,2), "
+                   "price long, discount long")
+        ws = Workspace(spark, store={"facts": df})
+        ws.import_model(GOLDEN_MODEL)
+        browser = ws.browser("facts", exclude_null_aggregates=True)
+        request = dict(drilldown=["year"],
+                       aggregates=["amount_sum", "count"])
+        summary, _, cells = self._expected(browser, **request)
+        # the count before the drop: aggregation_dataframe drops too
+        _, total, _ = self._expected(ws.browser("facts"), **request)
+        for page, page_size in ((None, None), (0, 2)):
+            actions.clear()
+            r = browser.aggregate(page=page, page_size=page_size,
+                                  **request)
+            assert (actions["collect"], actions["count"]) == (1, 0)
+            assert r.summary == summary
+            assert r.summary["count"] == 16
+            assert r.total_cell_count == total == 4
+            assert 2011 not in [c["year.year"] for c in r.cells]
+        assert r.cells == cells[:1]

@@ -132,6 +132,44 @@ def test_refresh_aggregate_incremental(tpch_browser, spark, tmp_path):
     assert len(got) > 12
 
 
+def test_refresh_through_browser_with_cuboid_registered(spark, tmp_path):
+    """A refresh through the browser that serves the cuboid aggregates
+    the delta from the fact star, not from the cuboid (which has no
+    rows for the new month yet)."""
+    from cubes_spark.demo import tpch_workspace
+    from cubes_spark.operators.preagg import Cuboid
+    from cubes_spark.query.drilldown import Drilldown
+    from tests.conftest import SF_DIR
+
+    grain = ["date@ym:month", "customer_geo:region", "returnflag"]
+    aggregates = ["price_sum", "quantity_sum", "fact_count"]
+    ws = tpch_workspace(spark, SF_DIR)
+    serving, free = ws.browser("sales"), ws.browser("sales")
+    path = str(tmp_path / "cuboid")
+    olap.materialize_aggregate(serving, path, grain, aggregates,
+                               cell="date:-1995")
+    refs = [a.ref for a in Drilldown(grain, serving.prepare_cell(None))
+            .all_attributes]
+    serving.add_cuboid(Cuboid(path, refs,
+                              serving.prepare_aggregates(aggregates)))
+
+    olap.refresh_aggregate(serving, path, grain, aggregates,
+                           delta_cell="date:1996,1")
+
+    def read(browser, cell):
+        return browser.aggregate(cell=cell, drilldown=grain[1:],
+                                 aggregates=aggregates)
+
+    new_month = read(serving, "date:1996,1")
+    assert new_month.cells and new_month.cells == \
+        read(free, "date:1996,1").cells
+    assert read(serving, "date:1995,1-1996,1").summary == \
+        read(free, "date:1995,1-1996,1").summary
+    rows = spark.read.parquet(path).collect()
+    assert {(r["date__year"], r["date__month"]) for r in rows} \
+        == {(1995, m) for m in range(1, 13)} | {(1996, 1)}
+
+
 def test_refresh_aggregate_rejects_nondistributive(tpch_browser,
                                                    tmp_path):
     import pytest as _pytest
