@@ -9,12 +9,11 @@ Execution-model differences (deliberate, Spark-first):
 
 * Reference issues up to 3 SQL statements per aggregate() call —
   summary, drilldown, total count (sql/browser.py:378-383).  We run
-  ONE Spark action for all three.  When the collected cells are all
-  the cells, the count is their number and the summary of
-  distributive aggregates over exact (decimal, integral) values is
-  folded from them.  Otherwise the count is a ``count(1) over ()``
-  column added before order and pagination, and the summary row of
-  the drilldown-free aggregation is unioned onto the cells.
+  ONE Spark action for all three: the summary row of the
+  drilldown-free aggregation, and the count row of the drilldown's
+  groups, are unioned onto the cells and come back in the same
+  ``collect``.  When the collected cells are all the cells, the count
+  is their number and needs no row of its own.
 * Post-aggregation window calculators run inside the same Spark plan
   (native Window functions) instead of client-side Python.
 * At scale: the cell condition is applied *before* aggregation so
@@ -25,10 +24,9 @@ Execution-model differences (deliberate, Spark-first):
 from __future__ import annotations
 
 import copy
-import decimal
 from typing import Any, Dict, Iterable, List, Optional, Sequence, Tuple
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cubes_spark.errors import ArgumentError, BrowserError
@@ -79,46 +77,9 @@ _AGG_EXPR_FUNCTIONS = {
     "variance": F.var_samp,
 }
 
-#: Aggregate functions whose summary is a fold of the cell values, and
-#: the fold of no values.  The fold is exact over the value types below
-#: (decimal too), not over floating point: a float sum depends on the
-#: order of its terms.
-_FOLDS = {"sum": (sum, None), "count": (sum, 0),
-          "count_nonempty": (sum, 0), "min": (min, None),
-          "max": (max, None)}
-_EXACT_DTYPES = {"tinyint", "smallint", "int", "bigint", "boolean",
-                 "string", "date", "timestamp_ntz"}
 #: helper columns of the one aggregate() action, dropped from the cells
 _CELL_COUNT = "__cell_count__"
 _SUMMARY_ROW = "__summary_row__"
-
-
-def _folds_exactly(aggregates: Sequence, dtypes: Dict[str, str]) -> bool:
-    """Whether the summary of every stored aggregate is an exact fold
-    of its cell values (``dtypes``: the aggregated frame's)."""
-    for agg in aggregates:
-        if agg.function in CALCULATED_AGGREGATIONS:
-            continue
-        dtype = dtypes[agg.name]
-        if agg.expression or agg.function not in _FOLDS or not (
-                dtype.startswith("decimal") or dtype in _EXACT_DTYPES):
-            return False
-    return True
-
-
-def _fold_summary(cells: Sequence[dict], aggregates: Sequence) -> dict:
-    """The summary folded from all the collected cells."""
-    summary = {}
-    with decimal.localcontext() as exact:
-        exact.prec = decimal.MAX_PREC     # decimal sums never round
-        for agg in aggregates:
-            if agg.function in CALCULATED_AGGREGATIONS:
-                continue
-            fold, empty = _FOLDS[agg.function]
-            values = [c[agg.name] for c in cells
-                      if c[agg.name] is not None]
-            summary[agg.name] = fold(values) if values else empty
-    return summary
 
 
 class SparkBrowser:
@@ -662,8 +623,23 @@ class SparkBrowser:
             dd_attributes = list(drilldown.key_attributes)
         else:
             dd_attributes = list(drilldown.all_attributes)
-        attributes = self._touched_attributes(cell, aggregates,
-                                              dd_attributes, split)
+        attributes = set(a.ref for a in dd_attributes)
+        attributes.update(a.ref for a in cell.all_attributes)
+        if split:
+            attributes.update(a.ref for a in split.all_attributes)
+        for agg in aggregates:
+            if agg.measure and agg.function not in CALCULATED_AGGREGATIONS:
+                attributes.add(agg.measure)
+            if agg.expression:
+                attributes.update(
+                    d for d in agg.dependencies
+                    if d in {a.ref for a in self.cube.all_fact_attributes}
+                )
+            if not agg.function and not agg.expression:
+                # pre-aggregated (base) aggregate: the physical column of
+                # the same name must be projected so F.sum over it
+                # resolves (reference maps it like any base attribute)
+                attributes.add(agg.name)
 
         context = self.aggregation_context(attributes)
 
@@ -716,35 +692,6 @@ class SparkBrowser:
             df = projected.agg(*[col for _, col in agg_pairs])
 
         return df, group_refs, agg_pairs
-
-    def _touched_attributes(self, cell: Cell, aggregates: Sequence,
-                            dd_attributes: Sequence,
-                            split: Optional[Cell]) -> set:
-        """Refs of every attribute an aggregation plan reads."""
-        attributes = set(a.ref for a in dd_attributes)
-        attributes.update(a.ref for a in cell.all_attributes)
-        if split:
-            attributes.update(a.ref for a in split.all_attributes)
-        for agg in aggregates:
-            if agg.measure and agg.function not in CALCULATED_AGGREGATIONS:
-                attributes.add(agg.measure)
-            if agg.expression:
-                attributes.update(
-                    d for d in agg.dependencies
-                    if d in {a.ref for a in self.cube.all_fact_attributes}
-                )
-            if not agg.function and not agg.expression:
-                # pre-aggregated (base) aggregate: the physical column of
-                # the same name must be projected so F.sum over it
-                # resolves (reference maps it like any base attribute)
-                attributes.add(agg.name)
-        return attributes
-
-    def _star_tables(self, attributes: Iterable[str]) -> set:
-        """Keys of the tables the star over ``attributes`` joins."""
-        closure = self.cube.collect_dependencies(list(attributes))
-        return {t.key for t in self.star_schema.required_tables(
-            a.ref for a in closure if a.is_base)}
 
     def _aggregate_columns(self, aggregates: Sequence,
                            projected_refs: Sequence[str],
@@ -891,12 +838,10 @@ class SparkBrowser:
         """Full aggregation request → AggregationResult
         (parity: query/browser.py:79-174 + sql/browser.py:351-461).
 
-        One Spark action per request: a single ``collect`` returns the
-        cells, the total cell count and the summary (see the module
-        docstring for how).  The one exception is a page that comes
-        back without cells — past the last cell, or emptied by
-        ``exclude_null_aggregates`` — which counts the cells in a
-        second action."""
+        One Spark action per request, with no exception: a single
+        ``collect`` returns the cells, the total cell count and the
+        summary (see the module docstring for how), for a page past the
+        last cell too.  Nothing is persisted."""
         cell = self.prepare_cell(cell)
         aggregates = self.prepare_aggregates(aggregates, measures)
         drilldown = Drilldown(drilldown, cell)
@@ -930,22 +875,16 @@ class SparkBrowser:
         # reference's `not (drilldown or split)` at sql/browser.py:420)
         summary = None
         if drilldown or split:
-            df, _, agg_pairs = self._aggregation_plan(
+            groups, _, agg_pairs = self._aggregation_plan(
                 cell, aggregates, drilldown, split,
             )
-            # the collected rows are all the cells: no page, no record
-            # limit, no null-aggregate drop
-            complete = page_size is None and not self.safe_record_limit \
-                and not self.exclude_null_agregates
-            groups = df
+            df = groups
             if page_size is None:
-                # every cell is collected anyway: order them in one
+                # every cell is collected anyway (and the guard above
+                # keeps such results browse-sized): order them in one
                 # partition, which spares a global sort's range
                 # sampling job and shuffle
                 df = df.repartition(1)
-            if include_cell_count and not complete:
-                df = df.withColumn(_CELL_COUNT,
-                                   F.count(F.lit(1)).over(Window.partitionBy()))
             order_spec = self.prepare_order(order, aggregates)
             final = self._finalize_drilldown(
                 df, order_spec, drilldown, bool(split), agg_pairs,
@@ -954,11 +893,17 @@ class SparkBrowser:
             if page_size is None and self.safe_record_limit:
                 # guard a driver-side OOM on unpaginated large grains
                 final = final.limit(self.safe_record_limit)
-            result.labels = [c for c in final.columns if c != _CELL_COUNT]
+            result.labels = final.columns
 
-            folded = include_summary and complete and self._summary_folds(
-                cell, aggregates, drilldown, split, dict(df.dtypes))
-            if include_summary and not folded:
+            # the collected rows are all the cells: no page, no record
+            # limit, no null-aggregate drop
+            complete = page_size is None and not self.safe_record_limit \
+                and not self.exclude_null_agregates
+            if include_cell_count and not complete:
+                final = final.unionByName(
+                    groups.agg(F.count(F.lit(1)).alias(_CELL_COUNT)),
+                    allowMissingColumns=True)
+            if include_summary:
                 final = final.unionByName(
                     self._summary_plan(cell, aggregates)
                     .withColumn(_SUMMARY_ROW, F.lit(True)),
@@ -966,22 +911,17 @@ class SparkBrowser:
             cells, total = [], None
             for row in final.collect():
                 values = row.asDict()
-                if values.pop(_SUMMARY_ROW, None):
+                count = values.pop(_CELL_COUNT, None)
+                is_summary = values.pop(_SUMMARY_ROW, None)
+                if count is not None:
+                    total = count
+                elif is_summary:
                     summary = {n: values[n] for n, _ in agg_pairs}
-                    continue
-                total = values.pop(_CELL_COUNT, total)
-                cells.append(values)
+                else:
+                    cells.append(values)
             result.cells = cells
-            if folded:
-                summary = _fold_summary(cells, aggregates)
             if include_cell_count:
-                if complete:
-                    total = len(cells)
-                elif total is None:
-                    # no cell came back to carry the count
-                    total = groups.count() if page or page_size == 0 \
-                        or self.exclude_null_agregates else 0
-                result.total_cell_count = total
+                result.total_cell_count = len(cells) if complete else total
         else:
             rows = self._summary_plan(cell, aggregates).collect()
             summary = rows[0].asDict() if rows else {}
@@ -997,23 +937,6 @@ class SparkBrowser:
                     )
             result.summary = summary
         return result
-
-    def _summary_folds(self, cell: Cell, aggregates: Sequence,
-                       drilldown: Drilldown, split: Optional[Cell],
-                       dtypes: Dict[str, str]) -> bool:
-        """Whether the summary is an exact fold of all the cells.  The
-        cells partition the summary's facts only when both read the
-        same star: a join the drilldown adds may drop facts (``match``)
-        or add rows (``detail``), and a cuboid may serve the two from
-        different cuboids.  Nor with ``coalesce_measures``: the sum of
-        no cells is 0 there, not NULL."""
-        if self._cuboids or self.options.get("coalesce_measures") \
-                or not _folds_exactly(aggregates, dtypes):
-            return False
-        grain = self._touched_attributes(
-            cell, aggregates, drilldown.all_attributes, split)
-        return self._star_tables(grain) == self._star_tables(
-            self._touched_attributes(cell, aggregates, [], None))
 
     def _summary_plan(self, cell: Cell, aggregates: Sequence) -> DataFrame:
         """The drilldown-free aggregation: one row, the summary."""
