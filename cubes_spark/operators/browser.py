@@ -18,13 +18,17 @@ Execution-model differences (deliberate, Spark-first):
   (native Window functions) instead of client-side Python.
 * At scale: the cell condition is applied *before* aggregation so
   Catalyst pushes predicates into the parquet scan; group-by runs with
-  map-side partial aggregation; small dimension joins broadcast.
+  map-side partial aggregation; small dimension joins broadcast, and a
+  small cube's joined star stays in memory on the workspace
+  (plans/star.py).
 """
 
 from __future__ import annotations
 
 import copy
-from typing import Any, Dict, Iterable, List, Optional, Sequence, Tuple
+from typing import (
+    Any, Callable, Dict, Iterable, List, Optional, Sequence, Tuple,
+)
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -93,6 +97,9 @@ class SparkBrowser:
     * ``safe_labels`` — unnecessary in Spark, accepted and ignored
     * ``exclude_null_aggregates`` — drop result rows with NULL in any
       built-in aggregate (sql/browser.py:144-147,616-618)
+
+    ``persisted`` returns the cube's persisted star, if any (see
+    ``StarSchema``); ``Workspace.browser`` passes the workspace's.
     """
 
     __extension_name__ = "spark"
@@ -103,7 +110,8 @@ class SparkBrowser:
         tables: Dict[str, DataFrame],
         locale: Optional[str] = None,
         naming: Optional[Naming] = None,
-        broadcast: Optional[set] = None,
+        persisted: Optional[Callable[[StarSchema], Optional[DataFrame]]]
+        = None,
         **options: Any,
     ) -> None:
         self.cube = cube
@@ -158,7 +166,7 @@ class SparkBrowser:
             mappings=self.mappings,
             joins=cube.joins,
             tables=tables,
-            broadcast=broadcast,
+            persisted=persisted,
         )
         self.hierarchies = cube.distilled_hierarchies()
         self._cuboids: List[Any] = []

@@ -13,10 +13,19 @@ what is needed").
 
 Scale notes (100 TB design):
 
-* Dimension tables are joined without a materialized denormalization;
-  Spark's planner picks broadcast-hash joins for small dims
-  automatically (size-based, AQE re-plans at runtime).  An explicit
-  ``broadcast`` set can force the hint per table.
+* A small cube keeps one persisted star: the join of the fact with
+  every table of its ``joins``, built once per workspace
+  (:meth:`StarSchema.persist_star`, owned by ``Workspace``).  A request
+  that needs any join reads it from memory instead of re-reading and
+  re-broadcasting its dimensions.  It is built only when every join is
+  ``match`` or ``master``, the fact's Catalyst size estimate is within
+  ``spark.sql.autoBroadcastJoinThreshold`` and the joins prove
+  lossless on the data (unique detail keys, no fact row dropped), so
+  it answers exactly like the join-pruned star.
+* Above that size, and for fact-only requests, the star is built per
+  request from the scans, joining only the required tables; Spark's
+  planner picks broadcast-hash joins for small dims (size-based, AQE
+  re-plans at runtime).
 * The fact table is never collected or repartitioned here — filters
   compiled from cuts are applied before aggregation so they reach the
   parquet scan (predicate pushdown + partition pruning).
@@ -25,7 +34,7 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 from collections import namedtuple
-from typing import Any, Dict, Iterable, List, Optional, Set, Tuple
+from typing import Any, Callable, Dict, Iterable, List, Optional, Set, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -194,6 +203,20 @@ def to_join(obj: Any) -> Join:
                 obj.alias, obj.method)
 
 
+#: Column of a persisted star holding its build number.  Spark's
+#: CacheManager matches plans by result, so without it a lazy plan of
+#: the same join (``Workspace.register_sql_views``) or another
+#: workspace's star over the same files would share, and unpersist,
+#: this star's cache entry.
+STAR_MARKER = "__star__"
+
+
+def _key_columns(key: JoinKey) -> tuple:
+    columns = key.column
+    return tuple(columns) if isinstance(columns, (list, tuple)) \
+        else (columns,)
+
+
 def _format_key(key: Tuple[Optional[str], Optional[str]]) -> str:
     schema, table = key
     table = table or "(FACT)"
@@ -207,10 +230,9 @@ class StarSchema:
     refs to :class:`ColumnRef`; `joins` describe the (snow)flake;
     `tables` is ``{name: DataFrame}`` for detail tables.
 
-    `broadcast` — optional set of table names (or aliases) to force a
-    broadcast-join hint on.  By default no hint is given and Spark's
-    size-based planning + AQE pick the join strategy (right call at
-    100 TB where some "dimensions" are themselves large).
+    `persisted` — optional callable returning the persisted star of
+    this schema (see :meth:`persist_star`) or None; :meth:`get_star`
+    serves every request that needs a join from it.
     """
 
     def __init__(
@@ -222,7 +244,8 @@ class StarSchema:
         joins: Optional[Iterable] = None,
         tables: Optional[Dict[str, DataFrame]] = None,
         schema: Optional[str] = None,
-        broadcast: Optional[Set[str]] = None,
+        persisted: Optional[Callable[["StarSchema"], Optional[DataFrame]]]
+        = None,
     ) -> None:
         self.label = label
         self.fact_name = fact_name
@@ -232,7 +255,7 @@ class StarSchema:
         self.schema = schema
         self.table_dataframes = dict(tables or {})
         self.table_dataframes.setdefault(fact_name, fact_df)
-        self.broadcast = set(broadcast or ())
+        self.persisted = persisted
 
         # fact table is referenced by None name as well (parity: query.py:344-350)
         self._tables: Dict[Tuple[Optional[str], Optional[str]], _TableRef] = {}
@@ -341,16 +364,19 @@ class StarSchema:
     def required_tables(self, attributes: Iterable[str]) -> List[_TableRef]:
         """Tables required for `attributes`, topologically sorted
         master→detail (parity: query.py:606-676)."""
-        attributes = list(attributes)
         # tables directly referenced by attribute mappings
         relevant: Set[Tuple[Optional[str], Optional[str]]] = set()
         for ref in attributes:
             mapping = self.mapping_for(ref)
             relevant.add((mapping.schema or self.schema, mapping.table))
+        return self._sorted_tables(relevant)
 
+    def _sorted_tables(self, relevant: Iterable[Tuple]) -> List[_TableRef]:
+        """The fact, the tables at keys `relevant` and every master they
+        join through, master before detail."""
         # fact is always there
         fact_key = (self.schema, self.fact_name)
-        relevant.add(fact_key)
+        relevant = set(relevant) | {fact_key}
 
         # transitive closure over join masters
         required: Dict[Tuple, _TableRef] = {}
@@ -407,8 +433,16 @@ class StarSchema:
 
     def get_star(self, attributes: Iterable[str]) -> DataFrame:
         """Join of exactly the tables required for `attributes`
-        ("The Method", parity: query.py:681-816)."""
+        ("The Method", parity: query.py:681-816).  A request that needs
+        any join reads the persisted star instead, when there is one."""
         tables = self.required_tables(attributes)
+        if len(tables) > 1 and self.persisted is not None:
+            star = self.persisted(self)
+            if star is not None:
+                return star
+        return self._join(tables)
+
+    def _join(self, tables: List[_TableRef]) -> DataFrame:
         star = tables[0].df  # the fact
 
         for table_ref in tables[1:]:
@@ -425,12 +459,8 @@ class StarSchema:
             )
             master = self.table(master_key)
 
-            master_cols = join.master.column
-            detail_cols = join.detail.column
-            if not isinstance(master_cols, (list, tuple)):
-                master_cols = (master_cols,)
-            if not isinstance(detail_cols, (list, tuple)):
-                detail_cols = (detail_cols,)
+            master_cols = _key_columns(join.master)
+            detail_cols = _key_columns(join.detail)
             if len(master_cols) != len(detail_cols):
                 raise ModelError(
                     f"Compound key size mismatch in join for "
@@ -455,13 +485,72 @@ class StarSchema:
             else:
                 raise ModelError(f"Unknown join method '{method}'")
 
-            detail_df = table_ref.df
-            if table_ref.name in self.broadcast or table_ref.alias in self.broadcast:
-                detail_df = F.broadcast(detail_df)
-
-            star = star.join(detail_df, condition, how)
+            star = star.join(table_ref.df, condition, how)
 
         return star
+
+    def persist_star(self, build: int) -> Optional[DataFrame]:
+        """The join of the fact with every table of the schema,
+        persisted — or None when it could answer differently from the
+        join-pruned star or is too big to keep:
+
+        * a join is neither ``match`` nor ``master``;
+        * the fact's Catalyst size estimate exceeds
+          ``spark.sql.autoBroadcastJoinThreshold`` (-1: never persist);
+        * a join is lossy: a detail key is not unique in its table (it
+          would multiply facts), or a ``match`` join drops facts (then
+          the star has fewer rows than the fact).
+
+        The lossless check and the cache fill are one ``collect``.
+        `build` is the value of the :data:`STAR_MARKER` column."""
+        if not self.joins or any((join.method or "match") not in
+                                 ("match", "master") for join in self.joins):
+            return None
+        session = self.fact_df.sparkSession
+        threshold = session._jsparkSession.sessionState().conf() \
+            .autoBroadcastJoinThreshold()
+        size = self.fact_df._jdf.queryExecution().optimizedPlan() \
+            .stats().sizeInBytes()
+        if threshold < 0 or int(size) > threshold:
+            return None
+
+        tables = self._sorted_tables(
+            key for key in self._tables if key[1] is not None)
+        star = self._join(tables).withColumn(STAR_MARKER, F.lit(build))
+        star.persist()
+
+        # detail keys seen twice, over every detail table in one shuffle;
+        # a table joined under two aliases is listed once, and rows with
+        # a NULL key part join nothing and are left out
+        keys, checked = None, set()
+        for table_ref in tables[1:]:
+            columns = _key_columns(table_ref.join.detail)
+            if (table_ref.name, columns) in checked:
+                continue
+            checked.add((table_ref.name, columns))
+            parts = [F.col(f"`{c}`") for c in columns]
+            notnull = parts[0].isNotNull()
+            for part in parts[1:]:
+                notnull = notnull & part.isNotNull()
+            table_keys = self.table_dataframes[table_ref.name] \
+                .where(notnull).select(
+                    F.lit(table_ref.name).alias("table"),
+                    F.to_json(F.struct(*parts)).alias("key"))
+            keys = table_keys if keys is None else keys.unionAll(table_keys)
+        duplicates = keys.groupBy("table", "key").count() \
+            .where(F.col("count") > 1)
+
+        lossless = False
+        try:
+            row = star.agg(F.count(F.lit(1)).alias("star")) \
+                .crossJoin(self.fact_df.agg(F.count(F.lit(1)).alias("fact"))) \
+                .crossJoin(duplicates.agg(F.count(F.lit(1)).alias("dup"))) \
+                .collect()[0]
+            lossless = not row["dup"] and row["star"] == row["fact"]
+        finally:
+            if not lossless:
+                star.unpersist()
+        return star if lossless else None
 
 
 # ---------------------------------------------------------------------------

@@ -15,8 +15,11 @@ URLs; here a *store* is a table catalog for Spark:
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
+import threading
+import weakref
 from typing import Any, Dict, Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,7 +38,41 @@ from cubes_spark.namespace import Namespace
 from cubes_spark.operators.browser import SparkBrowser
 from cubes_spark.plans.mapper import Naming, distill_naming
 
-__all__ = ["Workspace", "ParquetStore", "read_model", "default_session"]
+__all__ = ["Workspace", "ParquetStore", "read_model", "default_session",
+           "session_config"]
+
+
+def session_config(cpus: int, shuffle_partitions: Optional[int] = None,
+                   master: Optional[str] = None) -> Dict[str, str]:
+    """Spark config of :func:`default_session`.  ``master`` is
+    ``SPARK_MASTER`` (None: ``local[cpus]``); the worker-daemon settings
+    name this checkout, so they apply to a local master only — remote
+    executors use their own Python environment."""
+    config = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or max(cpus, 8)),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.filterPushdown": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+    }
+    if not master:
+        config.update({
+            "spark.master": f"local[{cpus}]",
+            # preload numpy/pandas/pyarrow in the worker daemon: forked
+            # workers inherit the imports copy-on-write instead of
+            # paying ~0.5 s of import per worker process (guide §4.5)
+            "spark.python.daemon.module": "cubes_spark.pydaemon",
+            "spark.executorEnv.PYTHONPATH": os.pathsep.join(
+                [os.path.dirname(os.path.dirname(os.path.dirname(
+                    os.path.abspath(__file__))))]
+                + ([os.environ["PYTHONPATH"]]
+                   if os.environ.get("PYTHONPATH") else [])),
+        })
+    return config
 
 
 def default_session(app_name: str = "cubes_spark",
@@ -47,30 +84,11 @@ def default_session(app_name: str = "cubes_spark",
     work from sf0.001 local tests to a 1000-executor cluster.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(cpus, 8)))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # preload numpy/pandas/pyarrow in the worker daemon: forked
-        # workers inherit the imports copy-on-write instead of paying
-        # ~0.5 s of import per worker process (guide §4.5)
-        .config("spark.python.daemon.module", "cubes_spark.pydaemon")
-        .config("spark.executorEnv.PYTHONPATH",
-                os.pathsep.join(
-                    [os.path.dirname(os.path.dirname(os.path.dirname(
-                        os.path.abspath(__file__))))]
-                    + ([os.environ["PYTHONPATH"]]
-                       if os.environ.get("PYTHONPATH") else [])))
-    )
-    if not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
+    builder = SparkSession.builder.appName(app_name)
+    for key, value in session_config(
+            cpus, shuffle_partitions,
+            os.environ.get("SPARK_MASTER")).items():
+        builder = builder.config(key, value)
     return builder.getOrCreate()
 
 
@@ -132,6 +150,8 @@ class ParquetStore:
         self.path = path
         self.naming = distill_naming(naming or {})
         self._cache: Dict[str, DataFrame] = {}
+        # one DataFrame per table, also under concurrent first reads
+        self._lock = threading.Lock()
 
     def _locate(self, name: str):
         for ext in self.EXTENSIONS:
@@ -141,18 +161,19 @@ class ParquetStore:
         return None, None
 
     def table(self, name: str) -> DataFrame:
-        if name not in self._cache:
-            location, ext = self._locate(name)
-            if location is None:
-                raise StoreError(
-                    f"No table '{name}' in store at {self.path} "
-                    f"(formats: {'/'.join(self.EXTENSIONS)})"
-                )
-            if ext == ".parquet":
-                self._cache[name] = self._read(location)
-            else:
-                self._cache[name] = self._read_other(location, ext)
-        return self._cache[name]
+        with self._lock:
+            if name not in self._cache:
+                location, ext = self._locate(name)
+                if location is None:
+                    raise StoreError(
+                        f"No table '{name}' in store at {self.path} "
+                        f"(formats: {'/'.join(self.EXTENSIONS)})"
+                    )
+                if ext == ".parquet":
+                    self._cache[name] = self._read(location)
+                else:
+                    self._cache[name] = self._read_other(location, ext)
+            return self._cache[name]
 
     def _read_other(self, location: str, ext: str) -> DataFrame:
         """Non-parquet formats; timestamps normalize to TIMESTAMP
@@ -237,6 +258,20 @@ class ParquetStore:
 
     def keys(self) -> list:
         return self.list_tables()
+
+
+#: numbers the persisted stars of this process (``STAR_MARKER`` values)
+_STAR_BUILDS = itertools.count(1)
+
+
+def _unpersist_stars(stars: Dict[tuple, Optional[DataFrame]]) -> None:
+    """Unpersist and forget `stars`; a stopped Spark context took its
+    cache with it."""
+    for star in stars.values():
+        if star is not None and \
+                star.sparkSession.sparkContext._jsc is not None:
+            star.unpersist()
+    stars.clear()
 
 
 def read_model(metadata: Any) -> dict:
@@ -351,6 +386,18 @@ class Workspace:
         #: workspace.py store_infos / get_store; a cube's ``store``
         #: metadata selects one by name, "default" = self.store)
         self.stores: Dict[str, ParquetStore] = {}
+        #: each cube's persisted star, or None where its gates fail
+        #: (plans/star.py StarSchema.persist_star), keyed by (cube,
+        #: fact).  Built on a request's first need under the lock;
+        #: dropped when models, tables or stores change and when the
+        #: workspace is collected (not at exit: the cache ends with the
+        #: process).  The generation tells browsers made before a drop
+        #: that the stars are not theirs.
+        self._stars: Dict[tuple, Optional[DataFrame]] = {}
+        self._star_lock = threading.Lock()
+        self._star_generation = 0
+        weakref.finalize(self, _unpersist_stars,
+                         self._stars).atexit = False
 
         if store is not None:
             self.set_store(store)
@@ -364,6 +411,8 @@ class Workspace:
         default store (parity: reference workspace.py:308-340
         _register_store_dict)."""
         from cubes_spark.sources.slicer import SlicerHTTPStore
+
+        self._drop_stars()
 
         if isinstance(store, str):
             store = ParquetStore(self.spark, store, self.naming)
@@ -400,9 +449,35 @@ class Workspace:
                 f"Unknown store '{name}' "
                 f"(registered: {sorted(self.stores)})")
 
+    # -- persisted stars ---------------------------------------------------
+
+    def _drop_stars(self) -> None:
+        """Unpersist every cube's star; the next request that needs a
+        join builds it again."""
+        with self._star_lock:
+            self._star_generation += 1
+            _unpersist_stars(self._stars)
+
+    def _star_source(self, cube_name: str):
+        """``persisted`` callable of a browser of `cube_name`: the
+        cube's star, built once by the first request that needs it."""
+        generation = self._star_generation
+
+        def persisted(schema: Any) -> Optional[DataFrame]:
+            key = (cube_name, schema.fact_name)
+            with self._star_lock:
+                if generation != self._star_generation:
+                    return None
+                if key not in self._stars:
+                    self._stars[key] = schema.persist_star(
+                        next(_STAR_BUILDS))
+                return self._stars[key]
+        return persisted
+
     # -- stores / tables ---------------------------------------------------
 
     def set_store(self, store: Any) -> None:
+        self._drop_stars()
         if isinstance(store, str):
             self.store = ParquetStore(self.spark, store, self.naming)
         elif isinstance(store, ParquetStore):
@@ -434,6 +509,7 @@ class Workspace:
             raise ArgumentError(f"Unknown store: {store!r}")
 
     def add_table(self, name: str, df: DataFrame) -> None:
+        self._drop_stars()
         self._tables[name] = df
 
     def add_table_expression(self, name: str, sql: str) -> None:
@@ -561,6 +637,7 @@ class Workspace:
         instance, or a provider class — it receives ``metadata`` as
         its source and its :meth:`model_metadata` result is imported.
         Default (None): ``metadata`` is the model itself."""
+        self._drop_stars()
         if provider is not None:
             from cubes_spark import ext
             from cubes_spark.metadata.providers import ModelProvider
@@ -638,6 +715,7 @@ class Workspace:
         return names
 
     def add_cube(self, cube: Cube) -> None:
+        self._drop_stars()
         self._cubes[cube.name] = cube
 
     def add_dimension(self, dimension: Dimension) -> None:
@@ -748,7 +826,8 @@ class Workspace:
             return SlicerBrowser(cube, bound, locale=locale, **options)
         tables = self.tables_for_cube(cube)
         return SparkBrowser(
-            cube, tables, locale=locale, naming=self.naming, **options
+            cube, tables, locale=locale, naming=self.naming,
+            persisted=self._star_source(cube.name), **options
         )
 
     def register_sql_views(self, cubes: Optional[list] = None,
@@ -777,7 +856,10 @@ class Workspace:
             name = info["name"]
             if cubes is not None and name not in cubes:
                 continue
-            browser = self.browser(name)
+            # no persisted star: the view stays a lazy plan
+            cube = self.cube(name)
+            browser = SparkBrowser(cube, self.tables_for_cube(cube),
+                                   naming=self.naming)
             df = browser.denormalized_dataframe()
             safe = df.select(*[
                 F.col(f"`{c}`").alias(_safe(c)) for c in df.columns])
