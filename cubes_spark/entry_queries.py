@@ -443,7 +443,7 @@ def q_preagg_year(spark, sf_dir):
 
 def q_preagg_rollup_rewrite(spark, sf_dir):
     """Algebraic pre-aggregation rewrite (operators/preagg.py
-    Cuboid.partials_for + browser._try_cuboid_plan): the month-grain
+    Cuboid.partials_for + Cuboid.plan): the month-grain
     cuboid stores only sum/count partials, yet serves a COARSER
     year-grain query asking for ``quantity_avg`` — reconstructed as
     sum(sums)/sum(counts), bit-identical to the engine's decimal-exact

@@ -37,7 +37,6 @@ from cubes_spark.errors import ArgumentError, BrowserError
 from cubes_spark.functions.aggregates import (
     available_aggregate_functions,
     get_aggregate_function,
-    variance_from_sums,
 )
 from cubes_spark.functions.calculators import (
     CALCULATED_AGGREGATIONS,
@@ -216,187 +215,20 @@ class SparkBrowser:
 
     def _try_cuboid_plan(self, cell: Cell, aggregates: Sequence,
                          drilldown: Drilldown, split: Optional[Cell]):
-        """Rewrite the aggregation against a covering cuboid, if any.
-        Returns the usual (df, group_refs, agg_pairs) or None."""
+        """Rewrite the aggregation against a covering cuboid, if any
+        (operators/preagg.py ``Cuboid.plan``).  Returns the usual
+        (df, group_refs, agg_pairs) or None."""
         if not self._cuboids or split is not None:
             return None
-
-        from cubes_spark.operators.preagg import (
-            REAGGREGABLE, SAFE_SEP, Cuboid, reaggregation_column,
-        )
-        from cubes_spark.plans.star import ColumnRef, StarSchema
-
-        storable = [
-            a for a in aggregates
-            if a.function not in CALCULATED_AGGREGATIONS
-        ]
-        dd_refs = [a.ref for a in drilldown.all_attributes]
-        cell_refs = {a.ref for a in cell.all_attributes}
-        touched = set(dd_refs) | cell_refs
-
-        # coalesce_measures changes avg semantics (NULL measures count
-        # after coalescing to 0), so sum/count_nonempty partials no
-        # longer reconstruct it — disable that rewrite path
-        allow_partials = not self.options.get("coalesce_measures")
-
-        # smallest covering cuboid first (recorded row counts;
-        # unknown sizes keep registration order and sort last among
-        # ties) — a year-grain rollup beats re-aggregating the
-        # month-grain one when both cover
-        ordered = sorted(
-            enumerate(self._cuboids),
-            key=lambda ic: (ic[1].rows is None,
-                            ic[1].rows if ic[1].rows is not None else 0,
-                            ic[0]))
-        for _, cuboid in ordered:
-            if not cuboid.covers(touched, storable, dd_refs,
-                                 allow_partials=allow_partials):
-                continue
-
-            raw = cuboid.load(self.star_schema.fact_df.sparkSession)
-            mappings = {
-                ref: ColumnRef(None, "cuboid", ref.replace(".", SAFE_SEP),
-                               None, None, None)
-                for ref in cuboid.attribute_refs
-            }
-            star = StarSchema("cuboid", "cuboid", raw,
-                              mappings=mappings, joins=[],
-                              tables={"cuboid": raw})
-
-            class _Ref:
-                is_base = True
-                expression = None
-                function = None
-
-                def __init__(self, ref: str) -> None:
-                    self.ref = ref
-
-            context = QueryContext(
-                star, [_Ref(r) for r in cuboid.attribute_refs],
-                hierarchies=self.hierarchies,
-            )
-            df = context.star
-            condition = context.condition_for_cell(cell)
-            if condition is not None:
-                df = df.filter(condition)
-
-            exact = cuboid.is_exact(dd_refs)
-            # aggregates served by algebraic reconstruction from stored
-            # partials (avg = sum(sums)/sum(counts)) instead of a
-            # stored column: not stored at all, or stored but not
-            # distributive at a coarser grain
-            recon: dict = {}
-            # count_distinct at a coarser grain served EXACTLY from the
-            # companion distinct-key table written at materialization
-            # (distinct-set union; per-grain exact counts cannot
-            # re-aggregate) — at the exact grain the stored value
-            # passes through as usual
-            dserve: dict = {}
-            for a in storable:
-                stored = cuboid.aggregates.get(a.name)
-                if allow_partials and not exact \
-                        and a.function == "count_distinct" \
-                        and a.name in cuboid.distinct_tables:
-                    dserve[a.name] = cuboid.distinct_tables[a.name]
-                    continue
-                if allow_partials and (
-                        stored is None
-                        or (not exact
-                            and a.function not in REAGGREGABLE)):
-                    parts = cuboid.partials_for(a)
-                    if parts is not None:
-                        recon[a.name] = parts
-            needed = [a.name for a in storable
-                      if a.name not in recon and a.name not in dserve]
-            for parts in recon.values():
-                for n in parts[1:]:
-                    if n not in needed:
-                        needed.append(n)
-            select_cols = [
-                context.column(ref).alias(ref) for ref in dd_refs
-            ] + [
-                F.col(f"`{n}`") for n in needed
-            ]
-            projected = df.select(*select_cols)
-            pairs = []
-            for a in storable:
-                if a.name in dserve:
-                    # served by the companion-table join below; the
-                    # expr is kept for the (name, column) contract —
-                    # consumers use the names only
-                    pairs.append((a.name,
-                                  F.count_distinct(F.col("`__key__`"))
-                                  .alias(a.name)))
-                    continue
-                if a.name in recon:
-                    kind, *names = recon[a.name]
-                    if kind == "avg":
-                        s_name, c_name = names
-                        expr = (
-                            F.sum(F.col(f"`{s_name}`")).cast("double")
-                            / F.sum(F.col(f"`{c_name}`")).cast("double")
-                        )
-                    else:
-                        # variance/stddev from merged (sum, count, sum²)
-                        # partials — same formula over the same exact
-                        # decimal sums as the direct path, hence
-                        # bit-identical (functions/aggregates.py)
-                        s_name, c_name, q_name = names
-                        var = variance_from_sums(
-                            F.sum(F.col(f"`{c_name}`")),
-                            F.sum(F.col(f"`{s_name}`")).cast("double"),
-                            F.sum(F.col(f"`{q_name}`")).cast("double"),
-                        )
-                        expr = var if kind == "variance" else F.sqrt(var)
-                    pairs.append((a.name, expr.alias(a.name)))
-                else:
-                    pairs.append((a.name, reaggregation_column(a, exact)))
-            main_cols = [c for n, c in pairs if n not in dserve]
-            if dd_refs:
-                grouped = projected.groupBy(
-                    *[_qcol(r) for r in dd_refs])
-                out = grouped.agg(*main_cols) if main_cols \
-                    else grouped.count().drop("count")
-            else:
-                # dummy aggregate keeps the frame well-formed when
-                # every requested aggregate is companion-served;
-                # dropped after the joins below
-                out = projected.agg(*main_cols) if main_cols \
-                    else projected.agg(F.lit(1).alias("__base__"))
-            for name, sub in dserve.items():
-                d_raw = raw.sparkSession.read.parquet(sub)
-                d_star = StarSchema("cuboid", "cuboid", d_raw,
-                                    mappings=mappings, joins=[],
-                                    tables={"cuboid": d_raw})
-                d_ctx = QueryContext(
-                    d_star, [_Ref(r) for r in cuboid.attribute_refs],
-                    hierarchies=self.hierarchies,
-                )
-                d_df = d_ctx.star
-                d_cond = d_ctx.condition_for_cell(cell)
-                if d_cond is not None:
-                    d_df = d_df.filter(d_cond)
-                d_proj = d_df.select(
-                    *[d_ctx.column(ref).alias(ref) for ref in dd_refs],
-                    F.col("`__key__`"))
-                d_expr = F.count_distinct(
-                    F.col("`__key__`")).alias(name)
-                if dd_refs:
-                    d_out = d_proj.groupBy(
-                        *[_qcol(r) for r in dd_refs]).agg(d_expr)
-                    out = out.join(d_out, list(dd_refs), "left")
-                else:
-                    out = out.crossJoin(d_proj.agg(d_expr))
-                # a group whose companion slice is empty has zero
-                # distinct keys — count_distinct semantics, not NULL
-                out = out.withColumn(
-                    name, F.coalesce(_qcol(name),
-                                     F.lit(0).cast("long")))
-            if dserve:
-                out = out.select(
-                    *[_qcol(r) for r in dd_refs],
-                    *[_qcol(a.name) for a in storable])
-            return out, list(dd_refs), pairs
+        # smallest covering cuboid first (recorded row counts; unknown
+        # sizes sort last, ties keep registration order) — a year-grain
+        # rollup beats re-aggregating the month-grain one when both
+        # cover
+        for cuboid in sorted(self._cuboids,
+                             key=lambda c: (c.rows is None, c.rows or 0)):
+            plan = cuboid.plan(self, cell, aggregates, drilldown)
+            if plan is not None:
+                return plan
         return None
 
     # ------------------------------------------------------------------
@@ -652,10 +484,7 @@ class SparkBrowser:
         context = self.aggregation_context(attributes)
 
         # 2. filter the star by the cell BEFORE aggregation (pushdown)
-        star = context.star
-        condition = context.condition_for_cell(cell)
-        if condition is not None:
-            star = star.filter(condition)
+        star = context.filtered_star(cell)
 
         # 3. projection: every ref the aggregation consumes, aliased to
         #    its logical name (Catalyst prunes the parquet scan to these)
@@ -976,12 +805,8 @@ class SparkBrowser:
         all_refs = set(refs)
         all_refs.update(a.ref for a in cell.all_attributes)
         context = self.aggregation_context(all_refs)
-
-        star = context.star
-        condition = context.condition_for_cell(cell)
-        if condition is not None:
-            star = star.filter(condition)
-        return star.select(*[context.column(r).alias(r) for r in refs])
+        return context.filtered_star(cell).select(
+            *[context.column(r).alias(r) for r in refs])
 
     def facts(
         self,
@@ -1007,16 +832,23 @@ class SparkBrowser:
             df = df.filter(_qcol(self.cube.key).isin(fact_list))
             if fields and self.cube.key not in [str(f) for f in fields]:
                 df = df.drop(self.cube.key)
-        order = self.prepare_order(order, [], is_aggregate=False)
+        cols = self._explicit_order(df, order)
+        if cols:
+            df = df.orderBy(*cols)
+        return self._paginate_df(df, page, page_size)
+
+    def _explicit_order(self, df: DataFrame,
+                        order: Optional[Iterable]) -> List[Column]:
+        """Sort columns of ``order`` over the columns ``df`` has
+        (``facts`` and ``members``)."""
         cols = []
-        for ref, direction in order:
+        for ref, direction in self.prepare_order(order, [],
+                                                 is_aggregate=False):
             if ref in df.columns:
                 col = _qcol(ref)
                 cols.append(col.desc() if direction and
                             direction.lower().startswith("desc") else col.asc())
-        if cols:
-            df = df.orderBy(*cols)
-        return self._paginate_df(df, page, page_size)
+        return cols
 
     def fact(self, key_value: Any, fields: Optional[Iterable] = None,
              cell: Any = None) -> Optional[dict]:
@@ -1064,12 +896,7 @@ class SparkBrowser:
         all_refs = set(refs)
         all_refs.update(a.ref for a in cell.all_attributes)
         context = self.aggregation_context(all_refs)
-
-        star = context.star
-        condition = context.condition_for_cell(cell)
-        if condition is not None:
-            star = star.filter(condition)
-        return star.select(
+        return context.filtered_star(cell).select(
             *[context.column(r).alias(r) for r in refs]
         ).distinct()
 
@@ -1089,15 +916,8 @@ class SparkBrowser:
         df = self.members_dataframe(
             cell, dimension, depth, level, hierarchy, attributes
         )
-        order = self.prepare_order(order, [], is_aggregate=False)
-        cols = []
-        for ref, direction in order:
-            if ref in df.columns:
-                col = _qcol(ref)
-                cols.append(col.desc() if direction and
-                            direction.lower().startswith("desc") else col.asc())
-        if not cols:
-            cols = [_qcol(c).asc() for c in df.columns]
+        cols = self._explicit_order(df, order) \
+            or [_qcol(c).asc() for c in df.columns]
         df = df.orderBy(*cols)
         df = self._paginate_df(df, page, page_size)
         return [row.asDict() for row in df.collect()]

@@ -24,8 +24,10 @@ from typing import Any, Dict, Iterable, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 
-from cubes_spark.operators.preagg import _safe
 from pyspark.sql import functions as F
+
+from cubes_spark.operators.preagg import Cuboid, _safe, safe_columns
+from cubes_spark.query.drilldown import Drilldown
 
 __all__ = [
     "period_over_period",
@@ -409,11 +411,7 @@ def materialize_denormalized(browser: Any, path: str,
     `partition_by` should be a low-cardinality dimension ref (e.g. the
     time dimension's year) so downstream queries get partition pruning.
     """
-    df = browser.denormalized_dataframe()
-    # logical refs contain dots — parquet field names cannot; translate
-    safe = df.select(
-        *[F.col(f"`{c}`").alias(_safe(c)) for c in df.columns]
-    )
+    safe = safe_columns(browser.denormalized_dataframe())
     # parquet ENCODE parallelism: a small star arrives with the scan's
     # partition count (a single-file fact table = 1-3 tasks pinning
     # the whole columnar encode to as many cores — measured 3-task
@@ -434,80 +432,31 @@ def materialize_aggregate(browser: Any, path: str,
                           drilldown: Sequence[str],
                           aggregates: Optional[Sequence[str]] = None,
                           mode: str = "overwrite",
-                          cell: Any = None) -> None:
-    """Materialize the aggregated cuboid at full drilldown grain
-    (parity: create_cube_aggregate, sql/store.py:549-628).  ``cell``
-    restricts the materialized slice — the building block for
+                          cell: Any = None) -> Cuboid:
+    """Materialize the aggregated cuboid at full drilldown grain and
+    return its descriptor (parity entry point of create_cube_aggregate,
+    sql/store.py:549-628; the writer is
+    :meth:`~cubes_spark.operators.preagg.Cuboid.materialize`).
+    ``cell`` restricts the materialized slice — the building block for
     incremental maintenance (see :func:`refresh_aggregate`)."""
-    df = browser.aggregation_dataframe(cell=cell, drilldown=drilldown,
-                                       aggregates=aggregates)
-    safe = df.select(
-        *[F.col(f"`{c}`").alias(_safe(c)) for c in df.columns]
-    )
-    safe.write.mode(mode).parquet(path)
+    return Cuboid.materialize(browser, path, drilldown, aggregates,
+                              mode=mode, cell=cell)
 
 
 def refresh_aggregate(browser: Any, path: str,
                       drilldown: Sequence[str],
                       aggregates: Optional[Sequence[str]] = None,
                       delta_cell: Any = None) -> None:
-    """INCREMENTAL cuboid maintenance: aggregate only the
-    ``delta_cell`` slice of new facts and merge it into the cuboid at
-    ``path`` — at 100 TB the nightly refresh touches one partition's
-    facts, never the historical table.
-
-    Merge = union + one groupBy over partial states, so it only
-    applies to distributive aggregates (sum→sum, count→sum,
-    count_nonempty→sum, min→min, max→max); anything else raises —
-    store sum+count and derive avg downstream instead.  The merged
-    result is checkpointed off the source files before overwriting
-    ``path`` (read-then-overwrite cycle break).
-
-    The delta slice must be DISJOINT from what the cuboid already
-    covers (the natural case: a new date partition); overlapping rows
-    would double-count, exactly like any partial-aggregate store.
-    """
-    from cubes_spark.errors import ArgumentError
-    from cubes_spark.operators.preagg import REAGGREGABLE
-
-    resolved = browser.prepare_aggregates(aggregates)
-    for agg in resolved:
-        fname = agg.function
-        # a function-LESS aggregate (expression / pre-computed) must
-        # raise too: silently skipping it would leave its value column
-        # in the merge grain, so existing and delta rows with the same
-        # logical grain never merge — duplicate-grain rows that
-        # double-count downstream
-        if not fname or fname not in REAGGREGABLE:
-            raise ArgumentError(
-                f"Aggregate '{agg.name}' ({fname or 'no function'}) "
-                "is not distributive — cannot be incrementally "
-                "merged; materialize sum/count partials instead"
-            )
-    merge_fns = {
-        agg.name: REAGGREGABLE[agg.function] for agg in resolved
-    }
-
-    # the delta is aggregated from the fact star: a registered cuboid
-    # (the one refreshed here, say) has no rows for the new slice yet
-    delta = browser._fact_only().aggregation_dataframe(
-        cell=delta_cell, drilldown=drilldown, aggregates=aggregates
-    )
-    spark = delta.sparkSession
-    safe_delta = delta.select(
-        *[F.col(f"`{c}`").alias(_safe(c)) for c in delta.columns]
-    )
-    existing = spark.read.parquet(path)
-    grain = [c for c in existing.columns if c not in merge_fns]
-    merged = (
-        existing.unionByName(safe_delta.select(*existing.columns))
-        .groupBy(*[F.col(f"`{c}`") for c in grain])
-        .agg(*[fn(F.col(f"`{name}`")).alias(name)
-               for name, fn in merge_fns.items()])
-        .select(*existing.columns)
-        .localCheckpoint(eager=True)
-    )
-    merged.write.mode("overwrite").parquet(path)
+    """INCREMENTAL cuboid maintenance of the cuboid at ``path``: the
+    path-based entry point of
+    :meth:`~cubes_spark.operators.preagg.Cuboid.refresh`, which
+    aggregates the ``delta_cell`` slice of new facts and merges it in.
+    Distributive aggregates only; the delta must be disjoint from what
+    the cuboid already covers."""
+    cell = browser.prepare_cell(delta_cell)
+    refs = [a.ref for a in Drilldown(drilldown, cell).all_attributes]
+    Cuboid(path, refs, browser.prepare_aggregates(aggregates)).refresh(
+        browser, cell)
 
 
 # ---------------------------------------------------------------------------

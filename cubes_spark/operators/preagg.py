@@ -1,17 +1,22 @@
-"""Pre-aggregation aware query rewriting.
+"""Pre-aggregated cuboids: the one module that writes, merges and
+reads a batch cuboid.  The reference can only *materialize* the
+full-grain cuboid (``create_cube_aggregate``, cubes/sql/store.py:
+549-628); here a :class:`Cuboid` has one lifecycle:
 
-The reference can only *materialize* the full-grain cuboid
-(/root/reference/cubes/sql/store.py:549-628) — browsing it again
-requires pointing a new cube at the table by hand.  Here materialized
-cuboids are first-class: register one with the browser
-(``browser.materialize_cuboid`` / ``browser.add_cuboid``) and any
-aggregation whose grain, cell and aggregates it covers is transparently
-rewritten to scan the (small) cuboid instead of the fact star.
+* **materialize** — :meth:`Cuboid.materialize` writes the aggregate at
+  a drilldown's grain (optionally a cell's slice of it) and returns
+  the descriptor (``olap.materialize_aggregate`` is its parity entry);
+* **register** — ``browser.add_cuboid``: an aggregation whose grain,
+  cell and aggregates a cuboid covers is rewritten by
+  :meth:`Cuboid.plan` to scan the smallest such cuboid, not the star;
+* **refresh** — :meth:`Cuboid.refresh` merges the aggregate of a
+  delta slice of new facts (``olap.refresh_aggregate`` is its entry).
 
-At 100 TB this is the difference between re-scanning the fact table and
-reading a few thousand pre-aggregated rows: a day-grain cuboid of a
-100 TB fact is typically 4-6 orders of magnitude smaller, and month/
-year/summary queries re-aggregate it in milliseconds.
+Format: one parquet with a column per grain attribute ref (dots stored
+as ``__``, :func:`safe_columns`), per stored aggregate and per hidden
+partial; one ``{path}__distinct__{name}`` parquet of distinct
+``(grain..., __key__)`` per exact ``count_distinct``.  A day-grain
+cuboid of a 100 TB fact is typically 4-6 orders of magnitude smaller.
 
 Rewrite rules (correctness first — anything not provably equivalent
 falls back to the fact star):
@@ -61,7 +66,8 @@ from typing import Any, List, Optional, Sequence
 from pyspark.sql import functions as F
 
 __all__ = ["Cuboid", "StreamAggregateCuboid", "HLLCuboid",
-           "REAGGREGABLE", "reaggregation_column", "cuboid_sizes",
+           "REAGGREGABLE", "reaggregation_column", "safe_columns",
+           "cuboid_sizes",
            "greedy_cuboid_selection", "advise_cuboids",
            "auto_materialize", "auto_maintain"]
 
@@ -81,13 +87,37 @@ def _safe(ref: str) -> str:
     return ref.replace(".", SAFE_SEP)
 
 
+def safe_columns(df: Any) -> Any:
+    """``df`` with every column renamed to its safe name: logical refs
+    contain dots, parquet field names cannot."""
+    return df.select(*[F.col(f"`{c}`").alias(_safe(c)) for c in df.columns])
+
+
+def _col(name: str):
+    """Column by name, backtick-safe for dotted logical refs."""
+    return F.col(f"`{name}`")
+
+
 def reaggregation_column(aggregate: Any, exact_grain: bool):
     """Column expression re-aggregating a stored partial state."""
-    col = F.col(f"`{aggregate.name}`")
+    col = _col(aggregate.name)
     if exact_grain:
         # one cuboid row per output group — any aggregate passes through
         return F.first(col).alias(aggregate.name)
     return REAGGREGABLE[aggregate.function](col).alias(aggregate.name)
+
+
+class _Ref:
+    """A grain attribute of a cuboid as a base attribute: what a
+    ``QueryContext`` reads of an attribute and a plan reads of a
+    drilldown attribute."""
+
+    is_base = True
+    expression = None
+    function = None
+
+    def __init__(self, ref: str) -> None:
+        self.ref = ref
 
 
 class Cuboid:
@@ -158,9 +188,12 @@ class Cuboid:
     @classmethod
     def materialize(cls, browser: Any, path: str, drilldown: Any,
                     aggregates: Optional[Sequence[str]] = None,
-                    mode: str = "overwrite") -> "Cuboid":
+                    mode: str = "overwrite", cell: Any = None) -> "Cuboid":
         """Write the cuboid parquet (logical refs stored with ``__`` for
-        dots) and return its descriptor.
+        dots) and return its descriptor.  ``cell`` restricts the
+        materialized slice — the starting point of incremental
+        maintenance (:meth:`refresh`).  Post-aggregate calculators are
+        not stored: no grain change can re-aggregate them.
 
         When the aggregate list contains an avg/variance/stddev of a
         measure, hidden ``(sum, count[, sum-of-squares])`` partial
@@ -179,7 +212,8 @@ class Cuboid:
         from cubes_spark.metadata.attributes import MeasureAggregate
         from cubes_spark.query.drilldown import Drilldown
 
-        dd = Drilldown(drilldown, browser.prepare_cell(None))
+        cell = browser.prepare_cell(cell)
+        dd = Drilldown(drilldown, cell)
         prepared = [
             a for a in browser.prepare_aggregates(aggregates)
             if a.function not in CALCULATED_AGGREGATIONS
@@ -222,10 +256,8 @@ class Cuboid:
             owned.add(name)
 
         df, _, _ = browser._aggregation_plan(
-            browser.prepare_cell(None), prepared + synthetic, dd, None)
-        safe = df.select(
-            *[F.col(f"`{c}`").alias(_safe(c)) for c in df.columns]
-        )
+            cell, prepared + synthetic, dd, None)
+        safe = safe_columns(df)
         dtypes = {c: t for c, t in safe.dtypes}
 
         # -- exactness gate per algebraic aggregate; keep only partial
@@ -265,13 +297,14 @@ class Cuboid:
         # (distinct-set union); one extra star pass per measure, the
         # table is <= the deduplicated key volume — far below facts
         distinct_tables: dict = {}
+        cell_refs = {a.ref for a in cell.all_attributes}
         for a in prepared:
             if a.function != "count_distinct" or not a.measure:
                 continue
             sub = f"{path}__distinct__{a.name}"
             context = browser.aggregation_context(
-                set(refs) | {a.measure})
-            proj = context.star.select(
+                set(refs) | {a.measure} | cell_refs)
+            proj = context.filtered_star(cell).select(
                 *[context.column(r).alias(_safe(r)) for r in refs],
                 context.column(a.measure).alias("__key__"))
             proj.distinct().write.mode(mode).parquet(sub)
@@ -286,6 +319,203 @@ class Cuboid:
                                   if _safe(n) in dtypes},
                    rows=rows, partials=partials,
                    distinct_tables=distinct_tables)
+
+    def refresh(self, browser: Any, delta_cell: Any = None) -> None:
+        """INCREMENTAL maintenance: aggregate only the ``delta_cell``
+        slice of the facts and merge it into the stored partials — the
+        nightly refresh touches one partition, never the history.
+
+        Merge = union + one groupBy, so only distributive aggregates
+        (:data:`REAGGREGABLE`) merge; anything else raises.  The merge
+        is checkpointed off the source files before it overwrites
+        ``self.path``.  The delta must be DISJOINT from what the cuboid
+        covers (overlapping rows double-count); ``rows`` keeps its
+        materialization-time value."""
+        from types import SimpleNamespace
+
+        from cubes_spark.errors import ArgumentError
+
+        merge_fns = {}
+        for name, agg in self.aggregates.items():
+            # a function-LESS aggregate (expression / pre-computed) must
+            # raise too: silently skipping it would leave its value
+            # column in the merge grain, so existing and delta rows with
+            # the same logical grain never merge — duplicate-grain rows
+            # that double-count downstream
+            if agg.function not in REAGGREGABLE:
+                raise ArgumentError(
+                    f"Aggregate '{name}' ({agg.function or 'no function'}) "
+                    "is not distributive — cannot be incrementally "
+                    "merged; materialize sum/count partials instead"
+                )
+            merge_fns[name] = REAGGREGABLE[agg.function]
+
+        # the delta is aggregated from the fact star (a registered
+        # cuboid — this one, say — has no rows for the new slice yet)
+        # by the writer's plan at the stored grain, which is all a plan
+        # reads of its drilldown
+        grain = SimpleNamespace(
+            all_attributes=[_Ref(r) for r in self.attribute_refs])
+        delta, _, _ = browser._fact_only()._aggregation_plan(
+            browser.prepare_cell(delta_cell),
+            list(self.aggregates.values()), grain, None)
+        existing = delta.sparkSession.read.parquet(self.path)
+        keys = [c for c in existing.columns if c not in merge_fns]
+        merged = (
+            existing.unionByName(
+                safe_columns(delta).select(*existing.columns))
+            .groupBy(*[_col(c) for c in keys])
+            .agg(*[fn(_col(name)).alias(name)
+                   for name, fn in merge_fns.items()])
+            .select(*existing.columns)
+            .localCheckpoint(eager=True)
+        )
+        merged.write.mode("overwrite").parquet(self.path)
+
+    def plan(self, browser: Any, cell: Any, aggregates: Sequence[Any],
+             drilldown: Any) -> Optional[tuple]:
+        """The browser's aggregation rewritten against this cuboid: the
+        usual ``(df, group_refs, agg_pairs)``, or None when the cuboid
+        does not cover the request."""
+        from cubes_spark.functions.aggregates import variance_from_sums
+        from cubes_spark.functions.calculators import (
+            CALCULATED_AGGREGATIONS,
+        )
+
+        storable = [
+            a for a in aggregates
+            if a.function not in CALCULATED_AGGREGATIONS
+        ]
+        dd_refs = [a.ref for a in drilldown.all_attributes]
+        touched = set(dd_refs) | {a.ref for a in cell.all_attributes}
+
+        # coalesce_measures changes avg semantics (NULL measures count
+        # after coalescing to 0), so sum/count_nonempty partials no
+        # longer reconstruct it — disable that rewrite path
+        allow_partials = not browser.options.get("coalesce_measures")
+        if not self.covers(touched, storable, dd_refs,
+                           allow_partials=allow_partials):
+            return None
+
+        raw = self.load(browser.star_schema.fact_df.sparkSession)
+        context, df = self._filtered(browser, raw, cell)
+
+        exact = self.is_exact(dd_refs)
+        # aggregates served by algebraic reconstruction from stored
+        # partials (avg = sum(sums)/sum(counts)) instead of a stored
+        # column: not stored at all, or stored but not distributive at
+        # a coarser grain
+        recon: dict = {}
+        # count_distinct at a coarser grain served EXACTLY from the
+        # companion distinct-key table written at materialization
+        # (distinct-set union; per-grain exact counts cannot
+        # re-aggregate) — at the exact grain the stored value passes
+        # through as usual
+        dserve: dict = {}
+        for a in storable:
+            stored = self.aggregates.get(a.name)
+            if allow_partials and not exact \
+                    and a.function == "count_distinct" \
+                    and a.name in self.distinct_tables:
+                dserve[a.name] = self.distinct_tables[a.name]
+                continue
+            if allow_partials and (
+                    stored is None
+                    or (not exact and a.function not in REAGGREGABLE)):
+                parts = self.partials_for(a)
+                if parts is not None:
+                    recon[a.name] = parts
+        needed = [a.name for a in storable
+                  if a.name not in recon and a.name not in dserve]
+        for parts in recon.values():
+            for n in parts[1:]:
+                if n not in needed:
+                    needed.append(n)
+        projected = df.select(
+            *[context.column(ref).alias(ref) for ref in dd_refs],
+            *[_col(n) for n in needed])
+        pairs = []
+        for a in storable:
+            if a.name in dserve:
+                # served by the companion-table join below; the expr is
+                # kept for the (name, column) contract — consumers use
+                # the names only
+                pairs.append((a.name,
+                              F.count_distinct(_col("__key__"))
+                              .alias(a.name)))
+                continue
+            if a.name in recon:
+                kind, *names = recon[a.name]
+                if kind == "avg":
+                    s_name, c_name = names
+                    expr = (F.sum(_col(s_name)).cast("double")
+                            / F.sum(_col(c_name)).cast("double"))
+                else:
+                    # variance/stddev from merged (sum, count, sum²)
+                    # partials — same formula over the same exact
+                    # decimal sums as the direct path, hence
+                    # bit-identical (functions/aggregates.py)
+                    s_name, c_name, q_name = names
+                    var = variance_from_sums(
+                        F.sum(_col(c_name)),
+                        F.sum(_col(s_name)).cast("double"),
+                        F.sum(_col(q_name)).cast("double"),
+                    )
+                    expr = var if kind == "variance" else F.sqrt(var)
+                pairs.append((a.name, expr.alias(a.name)))
+            else:
+                pairs.append((a.name, reaggregation_column(a, exact)))
+        main_cols = [c for n, c in pairs if n not in dserve]
+        if dd_refs:
+            grouped = projected.groupBy(*[_col(r) for r in dd_refs])
+            out = grouped.agg(*main_cols) if main_cols \
+                else grouped.count().drop("count")
+        else:
+            # dummy aggregate keeps the frame well-formed when every
+            # requested aggregate is companion-served; dropped after
+            # the joins below
+            out = projected.agg(*main_cols) if main_cols \
+                else projected.agg(F.lit(1).alias("__base__"))
+        for name, sub in dserve.items():
+            d_ctx, d_df = self._filtered(
+                browser, raw.sparkSession.read.parquet(sub), cell)
+            d_proj = d_df.select(
+                *[d_ctx.column(ref).alias(ref) for ref in dd_refs],
+                _col("__key__"))
+            d_expr = F.count_distinct(_col("__key__")).alias(name)
+            if dd_refs:
+                d_out = d_proj.groupBy(
+                    *[_col(r) for r in dd_refs]).agg(d_expr)
+                out = out.join(d_out, list(dd_refs), "left")
+            else:
+                out = out.crossJoin(d_proj.agg(d_expr))
+            # a group whose companion slice is empty has zero distinct
+            # keys — count_distinct semantics, not NULL
+            out = out.withColumn(
+                name, F.coalesce(_col(name), F.lit(0).cast("long")))
+        if dserve:
+            out = out.select(*[_col(r) for r in dd_refs],
+                             *[_col(a.name) for a in storable])
+        return out, list(dd_refs), pairs
+
+    def _filtered(self, browser: Any, raw: Any, cell: Any) -> tuple:
+        """``(context, df)``: a query context over ``raw`` — a table at
+        this cuboid's grain with safe column names — and ``raw``
+        filtered by ``cell``."""
+        from cubes_spark.plans.star import (
+            ColumnRef, QueryContext, StarSchema,
+        )
+
+        mappings = {
+            ref: ColumnRef(None, "cuboid", _safe(ref), None, None, None)
+            for ref in self.attribute_refs
+        }
+        star = StarSchema("cuboid", "cuboid", raw, mappings=mappings,
+                          joins=[], tables={"cuboid": raw})
+        context = QueryContext(
+            star, [_Ref(r) for r in self.attribute_refs],
+            hierarchies=browser.hierarchies)
+        return context, context.filtered_star(cell)
 
     def covers(self, attribute_refs: Sequence[str],
                aggregates: Sequence[Any],
@@ -377,6 +607,7 @@ class StreamAggregateCuboid(Cuboid):
         grain to its column name in the log.
         """
         from cubes_spark.errors import ArgumentError
+        from cubes_spark.streaming.stream import read_aggregate
 
         refs = list(column_map)
         grain_cols = [column_map[r] for r in refs]
@@ -390,7 +621,7 @@ class StreamAggregateCuboid(Cuboid):
                     f"cube model declares '{model_fn}' — the stored "
                     "partial would not mean what the browser serves")
         spark = browser.star_schema.fact_df.sparkSession
-        merged = cls._merged(spark, path, aggs)
+        merged = read_aggregate(spark, path, aggs)
         missing = [c for c in grain_cols if c not in merged.columns]
         if missing:
             raise ArgumentError(
@@ -405,18 +636,14 @@ class StreamAggregateCuboid(Cuboid):
                                   if n in dtypes},
                    rows=merged.count())
 
-    @staticmethod
-    def _merged(spark: Any, path: str, aggs: dict):
-        from cubes_spark.streaming.stream import read_aggregate
-
-        return read_aggregate(spark, path, aggs)
-
     def load(self, spark: Any):
         """Merge-on-read of the partial log, renamed to safe columns."""
-        df = self._merged(spark, self.path, self.aggs)
-        cols = [F.col(f"`{c}`").alias(_safe(ref))
+        from cubes_spark.streaming.stream import read_aggregate
+
+        df = read_aggregate(spark, self.path, self.aggs)
+        cols = [_col(c).alias(_safe(ref))
                 for ref, c in zip(self.attribute_refs, self.grain_cols)]
-        cols += [F.col(f"`{n}`") for n in self.aggs]
+        cols += [_col(n) for n in self.aggs]
         return df.select(*cols)
 
 
@@ -625,9 +852,7 @@ def advise_cuboids(browser: Any, drilldowns: Sequence[str],
     sizes = {
         r["grouping_id"]: r["size"]
         for r in cuboid_sizes(
-            grain.select(*[F.col(f"`{ref}`").alias(_safe(ref))
-                           for ref in refs]),
-            safe_refs).collect()
+            safe_columns(grain).select(*safe_refs), safe_refs).collect()
     }
     picks = greedy_cuboid_selection(sizes, n_picks, len(refs))
     out = []

@@ -608,6 +608,12 @@ class QueryContext:
 
     # -- conditions -------------------------------------------------------
 
+    def filtered_star(self, cell: Optional[Cell]) -> DataFrame:
+        """The star filtered by the cell, before any aggregation, so
+        the condition reaches the scans."""
+        condition = self.condition_for_cell(cell)
+        return self.star if condition is None else self.star.filter(condition)
+
     def condition_for_cell(self, cell: Optional[Cell]) -> Optional[Column]:
         """AND of all cut conditions (parity: query.py:940-949)."""
         if not cell or not cell.cuts:

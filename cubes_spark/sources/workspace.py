@@ -849,7 +849,7 @@ class Workspace:
         the extra joins are map-side).  Attribute refs translate dots
         to ``__`` (``date.year`` → ``date__year``) so no quoting is
         needed.  Returns the view names."""
-        from cubes_spark.operators.preagg import _safe
+        from cubes_spark.operators.preagg import safe_columns
 
         names = []
         for info in self.list_cubes():
@@ -860,10 +860,8 @@ class Workspace:
             cube = self.cube(name)
             browser = SparkBrowser(cube, self.tables_for_cube(cube),
                                    naming=self.naming)
-            df = browser.denormalized_dataframe()
-            safe = df.select(*[
-                F.col(f"`{c}`").alias(_safe(c)) for c in df.columns])
             view = prefix + name.replace(".", "__")
-            safe.createOrReplaceTempView(view)
+            safe_columns(browser.denormalized_dataframe()) \
+                .createOrReplaceTempView(view)
             names.append(view)
         return names

@@ -528,12 +528,12 @@ def stream_static_enrich(stream_df: DataFrame, dim_df: DataFrame,
 # ---------------------------------------------------------------------------
 #
 # The reference can only batch-materialize the full-grain cuboid
-# (/root/reference/cubes/sql/store.py:549-628); refresh_aggregate
-# (operators/olap.py) added batch delta merges.  This closes the loop
-# with the streaming layer: a cuboid maintained per MICRO-BATCH as an
-# append-only log of partial-aggregate partitions, merged on read and
-# compacted on demand — the plain-parquet version of what a
-# transactional table format would call incremental MV maintenance.
+# (cubes/sql/store.py:549-628); Cuboid.refresh (operators/preagg.py)
+# added batch delta merges.  This closes the loop with the streaming
+# layer: a cuboid maintained per MICRO-BATCH as an append-only log of
+# partial-aggregate partitions, merged on read and compacted on demand
+# — the plain-parquet version of what a transactional table format
+# would call incremental MV maintenance.
 
 def maintain_aggregate(stream_df: DataFrame, path: str,
                        group_cols: Sequence[str],
@@ -547,7 +547,7 @@ def maintain_aggregate(stream_df: DataFrame, path: str,
 
     ``aggs`` maps output column name -> ``(function, column)`` with
     ``function`` restricted to the distributive set
-    (:data:`~cubes_spark.operators.preagg.REAGGREGABLE` + ``count``):
+    (:data:`~cubes_spark.operators.preagg.REAGGREGABLE`):
     partials of different batches must merge by re-aggregation, which
     is exactly the cuboid rewrite's algebra — avg is served downstream
     from sum + count partials, never stored.
@@ -583,7 +583,7 @@ def maintain_aggregate(stream_df: DataFrame, path: str,
     from cubes_spark.operators.preagg import REAGGREGABLE
 
     for name, (fn, _col) in aggs.items():
-        if fn != "count" and fn not in REAGGREGABLE:
+        if fn not in REAGGREGABLE:
             raise ArgumentError(
                 f"Aggregate '{name}' ({fn}) is not distributive — "
                 "cannot be maintained incrementally; store sum/count "
@@ -643,13 +643,13 @@ def read_aggregate(spark: SparkSession, path: str,
     partitions by re-aggregation (sum->sum, count->sum, min->min,
     max->max) at the stored grain.  One scan of the (tiny) partial
     log — the fact stream is never touched."""
-    merge = {"sum": F.sum, "count": F.sum, "count_nonempty": F.sum,
-             "min": F.min, "max": F.max}
+    from cubes_spark.operators.preagg import REAGGREGABLE
+
     df = spark.read.parquet(path)
     grain = [c for c in df.columns
              if c not in aggs and c != "__batch_id__"]
     return (df.groupBy(*[F.col(c) for c in grain])
-            .agg(*[merge[fn](F.col(name)).alias(name)
+            .agg(*[REAGGREGABLE[fn](F.col(name)).alias(name)
                    for name, (fn, _col) in aggs.items()]))
 
 
@@ -659,7 +659,7 @@ def compact_aggregate(spark: SparkSession, path: str,
     (``__batch_id__=-1``) so read cost stays O(grain) as batches
     accumulate.  The merged frame is checkpointed off the source
     files before the full overwrite (read-then-overwrite cycle
-    break, same discipline as refresh_aggregate)."""
+    break, same discipline as Cuboid.refresh)."""
     merged = (read_aggregate(spark, path, aggs)
               .withColumn("__batch_id__", F.lit(-1))
               .localCheckpoint(eager=True))

@@ -72,6 +72,59 @@ def test_materialize_aggregate(tpch_browser, spark, tmp_path):
     assert df.count() == 7
 
 
+def test_materialize_aggregate_returns_served_cuboid(spark, tmp_path):
+    """The returned descriptor, registered, serves the same cells and
+    summary as the fact star; the post-aggregate calculator is computed
+    on read, not stored."""
+    from urllib.parse import unquote, urlparse
+
+    from cubes_spark.demo import tpch_workspace
+    from cubes_spark.operators.preagg import Cuboid
+    from tests.conftest import SF_DIR
+
+    b = tpch_workspace(spark, SF_DIR).browser("sales")
+    path = str(tmp_path / "agg")
+    request = dict(cell="date:1994-1996", drilldown=["date:year"],
+                   aggregates=["price_sum", "fact_count", "price_sma"])
+    want = b.aggregate(**request)
+    cuboid = olap.materialize_aggregate(
+        b, path, drilldown=["date:year", "returnflag"],
+        aggregates=["price_sum", "fact_count", "price_sma"])
+    assert isinstance(cuboid, Cuboid)
+    assert "price_sma" not in spark.read.parquet(path).columns
+
+    b.add_cuboid(cuboid)
+    files = [unquote(urlparse(f).path) for f in
+             b.aggregation_dataframe(**request).inputFiles()]
+    assert files and not any("lineitem" in f for f in files)
+    got = b.aggregate(**request)
+    assert got.cells == want.cells
+    assert got.summary == want.summary
+
+
+def test_refresh_aggregate_sorts_nothing(tpch_browser, spark, tmp_path,
+                                         monkeypatch):
+    """The delta is merged by a groupBy, which discards any order: the
+    refresh plans no sort."""
+    path = str(tmp_path / "cuboid")
+    olap.materialize_aggregate(
+        tpch_browser, path, drilldown=["date@ym:month"],
+        aggregates=["quantity_sum", "fact_count"], cell="date:-1995")
+
+    sorts = []
+    cls = type(spark.range(1))
+    for name in ("orderBy", "sort"):
+        def counted(self, *args, _name=name, _original=getattr(cls, name),
+                    **kwargs):
+            sorts.append(_name)
+            return _original(self, *args, **kwargs)
+        monkeypatch.setattr(cls, name, counted)
+    olap.refresh_aggregate(
+        tpch_browser, path, drilldown=["date@ym:month"],
+        aggregates=["quantity_sum", "fact_count"], delta_cell="date:1996")
+    assert sorts == []
+
+
 def test_denormalized_roundtrip_browsing(tpch_browser, spark, tmp_path):
     """materialize_denormalized output browses identically through a
     use_denormalization browser (DenormalizedMapper round-trip)."""

@@ -855,3 +855,50 @@ class TestDistinctFromCompanion:
             aggregates=["part_count_distinct"],
         )
         assert "lineitem" in plan_of(df)
+
+
+class TestRefresh:
+    """``Cuboid.refresh`` merges a delta slice of the facts into a
+    registered cuboid; the browser then serves the merged range from
+    the cuboid with the fact star's answers."""
+
+    AGGREGATES = ["price_sum", "quantity_sum", "fact_count",
+                  "price_min", "price_max"]
+
+    @staticmethod
+    def _files(df):
+        return [os.path.realpath(unquote(urlparse(f).path))
+                for f in df.inputFiles()]
+
+    def test_refresh_serves_merged_range(self, spark, tmp_path):
+        from cubes_spark.operators.preagg import Cuboid
+
+        b = tpch_workspace(spark, SF_DIR).browser("sales")
+        path = str(tmp_path / "ym_cuboid")
+        cuboid = Cuboid.materialize(
+            b, path, ["date@ym:month", "returnflag"], self.AGGREGATES,
+            cell="date:-1995")
+        b.add_cuboid(cuboid)
+        cuboid.refresh(b, "date:1996")
+
+        directory = os.path.realpath(path)
+        for cell, drilldown in [("date:1995-1996", ["date:year"]),
+                                ("date:1996,3", ["returnflag"]),
+                                ("date:1995,11-1996,2", ["date:month"]),
+                                ("date:-1996", None)]:
+            df = b.aggregation_dataframe(
+                cell=cell, drilldown=drilldown, aggregates=self.AGGREGATES)
+            files = self._files(df)
+            assert files and all(
+                os.path.commonpath([directory, f]) == directory
+                for f in files), (cell, files)
+            got = b.aggregate(cell=cell, drilldown=drilldown,
+                              aggregates=self.AGGREGATES)
+            want = b._fact_only().aggregate(
+                cell=cell, drilldown=drilldown,
+                aggregates=self.AGGREGATES)
+            assert got.cells == want.cells, cell
+            assert got.summary == want.summary, cell
+        # 1996 came in through the refresh, nothing after it
+        years = {r["date__year"] for r in spark.read.parquet(path).collect()}
+        assert max(years) == 1996
