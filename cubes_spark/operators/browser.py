@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import copy
 from typing import (
-    Any, Callable, Dict, Iterable, List, Optional, Sequence, Tuple,
+    Any, Callable, Dict, Iterable, List, Optional, Sequence,
 )
 
 from pyspark.sql import Column, DataFrame
@@ -65,6 +65,21 @@ __all__ = ["SparkBrowser"]
 def _qcol(name: str) -> Column:
     """Column by name, backtick-safe for dotted logical refs."""
     return F.col(f"`{name}`")
+
+
+def _sort_column(ref: str, direction: Optional[str]) -> Column:
+    """``ref`` ascending, or descending when ``direction`` says so."""
+    col = _qcol(ref)
+    if direction and direction.lower().startswith("desc"):
+        return col.desc()
+    return col.asc()
+
+
+def _computed_names(aggregates: Sequence) -> List[str]:
+    """Names of the aggregates an aggregation plan computes: all but
+    the post-calculated ones, in request order."""
+    return [a.name for a in aggregates
+            if a.function not in CALCULATED_AGGREGATIONS]
 
 
 #: Aggregate functions available inside aggregate ``expression`` strings,
@@ -214,10 +229,11 @@ class SparkBrowser:
         return view
 
     def _try_cuboid_plan(self, cell: Cell, aggregates: Sequence,
-                         drilldown: Drilldown, split: Optional[Cell]):
+                         drilldown: Drilldown,
+                         split: Optional[Cell]) -> Optional[DataFrame]:
         """Rewrite the aggregation against a covering cuboid, if any
-        (operators/preagg.py ``Cuboid.plan``).  Returns the usual
-        (df, group_refs, agg_pairs) or None."""
+        (operators/preagg.py ``Cuboid.plan``): its DataFrame, or
+        None."""
         if not self._cuboids or split is not None:
             return None
         # smallest covering cuboid first (recorded row counts; unknown
@@ -362,6 +378,20 @@ class SparkBrowser:
     # aggregation (the reason for our whole existence)
     # ------------------------------------------------------------------
 
+    def _prepare_request(self, cell: Any, aggregates: Optional[Iterable],
+                         drilldown: Any, split: Any,
+                         measures: Optional[Iterable] = None) -> tuple:
+        """``(cell, aggregates, drilldown, split)`` of an ``aggregate`` or
+        ``aggregation_dataframe`` request, normalized; ``split`` stays
+        None when not given."""
+        cell = self.prepare_cell(cell)
+        aggregates = self.prepare_aggregates(aggregates, measures)
+        if not isinstance(drilldown, Drilldown):
+            drilldown = Drilldown(drilldown, cell)
+        if split is not None:
+            split = self.prepare_cell(split)
+        return cell, aggregates, drilldown, split
+
     def aggregation_context(self, attributes: Iterable) -> QueryContext:
         closure = self.cube.collect_dependencies(
             [str(a) for a in attributes]
@@ -390,40 +420,36 @@ class SparkBrowser:
         aggregate names.  Parity of the plan shape:
         sql/browser.py:504-589 (aggregation_statement).
         """
-        cell = self.prepare_cell(cell)
-        aggregates = self.prepare_aggregates(aggregates)
-        if not isinstance(drilldown, Drilldown):
-            drilldown = Drilldown(drilldown, cell)
-        if split is not None and not isinstance(split, Cell):
-            split = Cell(self.cube, cuts_from_string(
-                self.cube, split,
-                role_member_converters=self._role_converters(),
-            )) if isinstance(split, str) else split
-
-        df, group_refs, agg_pairs = self._aggregation_plan(
+        cell, aggregates, drilldown, split = self._prepare_request(
+            cell, aggregates, drilldown, split)
+        df = self._aggregation_plan(
             cell, aggregates, drilldown, split,
             include_keys_only=include_keys_only,
         )
 
         order = self.prepare_order(order, aggregates)
         return self._finalize_drilldown(
-            df, order, drilldown, bool(split), agg_pairs, aggregates,
-            page, page_size,
+            df, order, drilldown, bool(split), _computed_names(aggregates),
+            aggregates, page, page_size,
         )
 
     def _finalize_drilldown(self, df, order_spec, drilldown, has_split,
-                            agg_pairs, aggregates, page, page_size):
+                            names, aggregates, page, page_size):
         """The shared tail of every drilldown request: order →
         paginate → null-aggregate drop → window calculators.  ONE
         implementation for both aggregation_dataframe and
-        aggregate() — a semantic fix here must not need making twice."""
-        df = self._order_df(df, order_spec, drilldown, has_split)
+        aggregate() — a semantic fix here must not need making twice.
+        ``names`` are the aggregate columns of ``df``."""
+        cols = self._order_columns(df.columns, order_spec, drilldown,
+                                   has_split)
+        if cols:
+            df = df.orderBy(*cols)
         df = self._paginate_df(df, page, page_size)
-        if self.exclude_null_agregates and agg_pairs:
+        if self.exclude_null_agregates and names:
             # parity: sql/browser.py:454-459,616-618 — the reference drops
             # NULL-aggregate rows client-side while iterating the final
             # (already paginated) drilldown result, never the summary.
-            df = df.na.drop(subset=[f"`{n}`" for n, _ in agg_pairs])
+            df = df.na.drop(subset=[f"`{n}`" for n in names])
 
         # post-calculated aggregates as native window functions
         specs = calculators_for_aggregates(self.cube, aggregates)
@@ -446,8 +472,10 @@ class SparkBrowser:
         drilldown: Drilldown,
         split: Optional[Cell],
         include_keys_only: bool = False,
-    ) -> Tuple[DataFrame, List[str], List[Tuple[str, Column]]]:
-        """Filtered star → groupBy(drilldown) → agg(aggregates).
+    ) -> DataFrame:
+        """Filtered star → groupBy(drilldown) → agg(aggregates): the
+        drilldown refs (+ split), then the aggregates that are not
+        post-calculated.
 
         When a registered cuboid covers the request, the plan reads the
         materialized aggregate instead (operators/preagg.py)."""
@@ -518,27 +546,24 @@ class SparkBrowser:
         projected = star.select(*select_cols) if select_cols else star
 
         # 4. aggregate expressions over the projected (logical) columns
-        agg_pairs = self._aggregate_columns(aggregates, projected_refs,
-                                            dict(projected.dtypes))
+        agg_cols = self._aggregate_columns(aggregates, projected_refs,
+                                           dict(projected.dtypes))
 
         if group_refs:
             grouped = projected.groupBy(*[_qcol(r) for r in group_refs])
-            df = grouped.agg(*[col for _, col in agg_pairs]) if agg_pairs \
+            return grouped.agg(*agg_cols) if agg_cols \
                 else grouped.count().drop("count")
-        else:
-            df = projected.agg(*[col for _, col in agg_pairs])
-
-        return df, group_refs, agg_pairs
+        return projected.agg(*agg_cols)
 
     def _aggregate_columns(self, aggregates: Sequence,
                            projected_refs: Sequence[str],
                            dtypes: Optional[Dict[str, str]] = None,
-                           ) -> List[Tuple[str, Column]]:
-        """Aggregate model objects → (name, Column) pairs over the
-        *projected* logical columns, skipping post-calculated ones
+                           ) -> List[Column]:
+        """Aggregate model objects → Columns aliased to their names over
+        the *projected* logical columns, skipping post-calculated ones
         (parity: sql/expressions.py:123-150 for expression aggregates;
         functions registry for the rest)."""
-        pairs: List[Tuple[str, Column]] = []
+        columns: List[Column] = []
         coalesce = bool(self.options.get("coalesce_measures"))
         agg_context: Dict[str, Column] = {
             ref: _qcol(ref) for ref in projected_refs
@@ -574,45 +599,22 @@ class SparkBrowser:
             else:
                 # direct (pre-aggregated) measure column
                 column = F.sum(_qcol(agg.name))
-            pairs.append((agg.name, column.alias(agg.name)))
-        return pairs
+            columns.append(column.alias(agg.name))
+        return columns
 
     def _calculator_partition(self, drilldown: Drilldown,
                               has_split: bool) -> Optional[List[Column]]:
-        """Window partition for post-calculators.
-
-        * ``"auto"`` (default): split + key columns of every drilldown
-          item except the last — the reference's legacy
-          ``aggregation_units`` behavior (statutils.py:128-139) and the
-          scale-safe choice: the window sort runs per partition instead
-          of moving the whole result to one task.  For single-item
-          drilldowns this equals ``"parity"``.
-        * ``"parity"``: split column only — the reference's modern
-          ``window_size`` semantics (statutils.py:104-119), a single
-          global window over the result order.  Opt in when a
-          calculator must run over the whole multi-dimension result in
-          global order (single-task sort at scale — paginate first).
-        """
-        mode = self.options.get("calculator_partition", "auto")
+        """Window partition for post-calculators: split + key columns
+        of every drilldown item except the last — the reference's legacy
+        ``aggregation_units`` behavior (statutils.py:128-139), so the
+        window sort runs per partition instead of moving the whole
+        result to one task."""
         cols: List[Column] = []
         if has_split:
             cols.append(_qcol(SPLIT_DIMENSION_NAME))
-        if mode == "auto" and len(drilldown) > 1:
-            for item in list(drilldown)[:-1]:
-                cols += [_qcol(level.key.ref) for level in item.levels]
+        for item in list(drilldown)[:-1]:
+            cols += [_qcol(level.key.ref) for level in item.levels]
         return cols or None
-
-    def _natural_order_columns(self, drilldown: Drilldown,
-                               has_split: bool) -> List[Column]:
-        """Split column first, then per-level natural order
-        (parity: sql/utils.py:142-158, query/browser.py:1010-1024)."""
-        cols: List[Column] = []
-        if has_split:
-            cols.append(_qcol(SPLIT_DIMENSION_NAME).desc())
-        for attribute, direction in drilldown.natural_order:
-            col = _qcol(attribute.ref)
-            cols.append(col.desc() if direction == "desc" else col.asc())
-        return cols
 
     def _order_columns(self, available_columns: Sequence[str],
                        order: Sequence, drilldown: Drilldown,
@@ -626,26 +628,16 @@ class SparkBrowser:
         for ref, direction in order or []:
             if ref not in available:
                 continue
-            col = _qcol(ref)
-            cols.append(col.desc() if direction and
-                        direction.lower().startswith("desc") else col.asc())
+            cols.append(_sort_column(ref, direction))
             used.add(ref)
         if has_split and SPLIT_DIMENSION_NAME not in used:
             cols.append(_qcol(SPLIT_DIMENSION_NAME).desc())
         for attribute, direction in drilldown.natural_order:
             if attribute.ref in used or attribute.ref not in available:
                 continue
-            col = _qcol(attribute.ref)
-            cols.append(col.desc() if direction == "desc" else col.asc())
+            cols.append(_sort_column(attribute.ref, direction))
             used.add(attribute.ref)
         return cols
-
-    def _order_df(self, df: DataFrame, order: Sequence,
-                  drilldown: Drilldown, has_split: bool) -> DataFrame:
-        cols = self._order_columns(df.columns, order, drilldown, has_split)
-        if cols:
-            df = df.orderBy(*cols)
-        return df
 
     @staticmethod
     def _paginate_df(df: DataFrame, page: Optional[int],
@@ -679,14 +671,9 @@ class SparkBrowser:
         ``collect`` returns the cells, the total cell count and the
         summary (see the module docstring for how), for a page past the
         last cell too.  Nothing is persisted."""
-        cell = self.prepare_cell(cell)
-        aggregates = self.prepare_aggregates(aggregates, measures)
-        drilldown = Drilldown(drilldown, cell)
-        if split is not None and isinstance(split, str):
-            split = Cell(self.cube, cuts_from_string(
-                self.cube, split,
-                role_member_converters=self._role_converters(),
-            ))
+        cell, aggregates, drilldown, split = self._prepare_request(
+            cell, aggregates, drilldown, split, measures)
+        names = _computed_names(aggregates)
 
         include_summary = self.include_summary if include_summary is None \
             else include_summary
@@ -712,7 +699,7 @@ class SparkBrowser:
         # reference's `not (drilldown or split)` at sql/browser.py:420)
         summary = None
         if drilldown or split:
-            groups, _, agg_pairs = self._aggregation_plan(
+            groups = self._aggregation_plan(
                 cell, aggregates, drilldown, split,
             )
             df = groups
@@ -724,7 +711,7 @@ class SparkBrowser:
                 df = df.repartition(1)
             order_spec = self.prepare_order(order, aggregates)
             final = self._finalize_drilldown(
-                df, order_spec, drilldown, bool(split), agg_pairs,
+                df, order_spec, drilldown, bool(split), names,
                 aggregates, page, page_size,
             )
             if page_size is None and self.safe_record_limit:
@@ -753,7 +740,7 @@ class SparkBrowser:
                 if count is not None:
                     total = count
                 elif is_summary:
-                    summary = {n: values[n] for n, _ in agg_pairs}
+                    summary = {n: values[n] for n in names}
                 else:
                     cells.append(values)
             result.cells = cells
@@ -778,7 +765,7 @@ class SparkBrowser:
     def _summary_plan(self, cell: Cell, aggregates: Sequence) -> DataFrame:
         """The drilldown-free aggregation: one row, the summary."""
         return self._aggregation_plan(
-            cell, aggregates, Drilldown(None, cell), None)[0]
+            cell, aggregates, Drilldown(None, cell), None)
 
     # ------------------------------------------------------------------
     # detail surface
@@ -801,10 +788,13 @@ class SparkBrowser:
         refs = [a.ref for a in attributes]
         if include_fact_key and self.cube.key and self.cube.key not in refs:
             refs = [self.cube.key] + refs
+        return self._select_in_cell(cell, refs)
 
-        all_refs = set(refs)
-        all_refs.update(a.ref for a in cell.all_attributes)
-        context = self.aggregation_context(all_refs)
+    def _select_in_cell(self, cell: Cell, refs: Sequence[str]) -> DataFrame:
+        """The star filtered by ``cell`` with ``refs`` selected under
+        their logical names."""
+        context = self.aggregation_context(
+            set(refs) | {a.ref for a in cell.all_attributes})
         return context.filtered_star(cell).select(
             *[context.column(r).alias(r) for r in refs])
 
@@ -845,9 +835,7 @@ class SparkBrowser:
         for ref, direction in self.prepare_order(order, [],
                                                  is_aggregate=False):
             if ref in df.columns:
-                col = _qcol(ref)
-                cols.append(col.desc() if direction and
-                            direction.lower().startswith("desc") else col.asc())
+                cols.append(_sort_column(ref, direction))
         return cols
 
     def fact(self, key_value: Any, fields: Optional[Iterable] = None,
@@ -892,13 +880,8 @@ class SparkBrowser:
         else:
             attributes = [a for lvl in levels for a in lvl.attributes]
 
-        refs = [a.ref for a in attributes]
-        all_refs = set(refs)
-        all_refs.update(a.ref for a in cell.all_attributes)
-        context = self.aggregation_context(all_refs)
-        return context.filtered_star(cell).select(
-            *[context.column(r).alias(r) for r in refs]
-        ).distinct()
+        return self._select_in_cell(
+            cell, [a.ref for a in attributes]).distinct()
 
     def members(
         self,

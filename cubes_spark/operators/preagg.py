@@ -54,6 +54,9 @@ falls back to the fact star):
   distinct count re-aggregates exactly, by set union).  The companion
   is ≤ the deduplicated key volume, far below the fact table; the
   rewrite joins its coarser-grain count into the main cuboid result.
+  At the cuboid's own grain a stored column wins; a ``count_distinct``
+  that only its companion holds is counted from the companion there
+  too.
   Approximate alternatives live in :class:`HLLCuboid` and are
   deliberately NOT part of this transparent (exactness-preserving)
   rewrite.
@@ -66,7 +69,7 @@ from typing import Any, List, Optional, Sequence
 from pyspark.sql import functions as F
 
 __all__ = ["Cuboid", "StreamAggregateCuboid", "HLLCuboid",
-           "REAGGREGABLE", "reaggregation_column", "safe_columns",
+           "REAGGREGABLE", "safe_columns",
            "cuboid_sizes",
            "greedy_cuboid_selection", "advise_cuboids",
            "auto_materialize", "auto_maintain"]
@@ -96,15 +99,6 @@ def safe_columns(df: Any) -> Any:
 def _col(name: str):
     """Column by name, backtick-safe for dotted logical refs."""
     return F.col(f"`{name}`")
-
-
-def reaggregation_column(aggregate: Any, exact_grain: bool):
-    """Column expression re-aggregating a stored partial state."""
-    col = _col(aggregate.name)
-    if exact_grain:
-        # one cuboid row per output group — any aggregate passes through
-        return F.first(col).alias(aggregate.name)
-    return REAGGREGABLE[aggregate.function](col).alias(aggregate.name)
 
 
 class _Ref:
@@ -255,7 +249,7 @@ class Cuboid:
             sumsqs[m] = name
             owned.add(name)
 
-        df, _, _ = browser._aggregation_plan(
+        df = browser._aggregation_plan(
             cell, prepared + synthetic, dd, None)
         safe = safe_columns(df)
         dtypes = {c: t for c, t in safe.dtypes}
@@ -356,7 +350,7 @@ class Cuboid:
         # reads of its drilldown
         grain = SimpleNamespace(
             all_attributes=[_Ref(r) for r in self.attribute_refs])
-        delta, _, _ = browser._fact_only()._aggregation_plan(
+        delta = browser._fact_only()._aggregation_plan(
             browser.prepare_cell(delta_cell),
             list(self.aggregates.values()), grain, None)
         existing = delta.sparkSession.read.parquet(self.path)
@@ -373,10 +367,11 @@ class Cuboid:
         merged.write.mode("overwrite").parquet(self.path)
 
     def plan(self, browser: Any, cell: Any, aggregates: Sequence[Any],
-             drilldown: Any) -> Optional[tuple]:
-        """The browser's aggregation rewritten against this cuboid: the
-        usual ``(df, group_refs, agg_pairs)``, or None when the cuboid
-        does not cover the request."""
+             drilldown: Any) -> Optional[Any]:
+        """The browser's aggregation rewritten against this cuboid: a
+        DataFrame of the drilldown refs and the aggregates that are not
+        post-calculated, or None when the cuboid does not cover the
+        request."""
         from cubes_spark.functions.aggregates import variance_from_sums
         from cubes_spark.functions.calculators import (
             CALCULATED_AGGREGATIONS,
@@ -392,80 +387,46 @@ class Cuboid:
         # coalesce_measures changes avg semantics (NULL measures count
         # after coalescing to 0), so sum/count_nonempty partials no
         # longer reconstruct it — disable that rewrite path
-        allow_partials = not browser.options.get("coalesce_measures")
-        if not self.covers(touched, storable, dd_refs,
-                           allow_partials=allow_partials):
+        recipes = self._recipes(
+            touched, storable, dd_refs,
+            allow_partials=not browser.options.get("coalesce_measures"))
+        if recipes is None:
             return None
 
         raw = self.load(browser.star_schema.fact_df.sparkSession)
         context, df = self._filtered(browser, raw, cell)
 
-        exact = self.is_exact(dd_refs)
-        # aggregates served by algebraic reconstruction from stored
-        # partials (avg = sum(sums)/sum(counts)) instead of a stored
-        # column: not stored at all, or stored but not distributive at
-        # a coarser grain
-        recon: dict = {}
-        # count_distinct at a coarser grain served EXACTLY from the
-        # companion distinct-key table written at materialization
-        # (distinct-set union; per-grain exact counts cannot
-        # re-aggregate) — at the exact grain the stored value passes
-        # through as usual
-        dserve: dict = {}
-        for a in storable:
-            stored = self.aggregates.get(a.name)
-            if allow_partials and not exact \
-                    and a.function == "count_distinct" \
-                    and a.name in self.distinct_tables:
-                dserve[a.name] = self.distinct_tables[a.name]
-                continue
-            if allow_partials and (
-                    stored is None
-                    or (not exact and a.function not in REAGGREGABLE)):
-                parts = self.partials_for(a)
-                if parts is not None:
-                    recon[a.name] = parts
-        needed = [a.name for a in storable
-                  if a.name not in recon and a.name not in dserve]
-        for parts in recon.values():
-            for n in parts[1:]:
-                if n not in needed:
-                    needed.append(n)
+        companions = {n: r[1] for n, r in recipes.items()
+                      if r[0] == "distinct"}
+        main = {n: r for n, r in recipes.items() if n not in companions}
+        needed = [n for n, r in main.items() if r[0] == "stored"]
+        for kind, *names in main.values():
+            if kind != "stored":
+                needed += [n for n in names if n not in needed]
         projected = df.select(
             *[context.column(ref).alias(ref) for ref in dd_refs],
             *[_col(n) for n in needed])
-        pairs = []
-        for a in storable:
-            if a.name in dserve:
-                # served by the companion-table join below; the expr is
-                # kept for the (name, column) contract — consumers use
-                # the names only
-                pairs.append((a.name,
-                              F.count_distinct(_col("__key__"))
-                              .alias(a.name)))
-                continue
-            if a.name in recon:
-                kind, *names = recon[a.name]
-                if kind == "avg":
-                    s_name, c_name = names
-                    expr = (F.sum(_col(s_name)).cast("double")
-                            / F.sum(_col(c_name)).cast("double"))
-                else:
-                    # variance/stddev from merged (sum, count, sum²)
-                    # partials — same formula over the same exact
-                    # decimal sums as the direct path, hence
-                    # bit-identical (functions/aggregates.py)
-                    s_name, c_name, q_name = names
-                    var = variance_from_sums(
-                        F.sum(_col(c_name)),
-                        F.sum(_col(s_name)).cast("double"),
-                        F.sum(_col(q_name)).cast("double"),
-                    )
-                    expr = var if kind == "variance" else F.sqrt(var)
-                pairs.append((a.name, expr.alias(a.name)))
+        main_cols = []
+        for name, (kind, *args) in main.items():
+            if kind == "stored":
+                expr = args[0](_col(name))
+            elif kind == "avg":
+                s_name, c_name = args
+                expr = (F.sum(_col(s_name)).cast("double")
+                        / F.sum(_col(c_name)).cast("double"))
             else:
-                pairs.append((a.name, reaggregation_column(a, exact)))
-        main_cols = [c for n, c in pairs if n not in dserve]
+                # variance/stddev from merged (sum, count, sum²)
+                # partials — same formula over the same exact decimal
+                # sums as the direct path, hence bit-identical
+                # (functions/aggregates.py)
+                s_name, c_name, q_name = args
+                var = variance_from_sums(
+                    F.sum(_col(c_name)),
+                    F.sum(_col(s_name)).cast("double"),
+                    F.sum(_col(q_name)).cast("double"),
+                )
+                expr = var if kind == "variance" else F.sqrt(var)
+            main_cols.append(expr.alias(name))
         if dd_refs:
             grouped = projected.groupBy(*[_col(r) for r in dd_refs])
             out = grouped.agg(*main_cols) if main_cols \
@@ -476,7 +437,7 @@ class Cuboid:
             # the joins below
             out = projected.agg(*main_cols) if main_cols \
                 else projected.agg(F.lit(1).alias("__base__"))
-        for name, sub in dserve.items():
+        for name, sub in companions.items():
             d_ctx, d_df = self._filtered(
                 browser, raw.sparkSession.read.parquet(sub), cell)
             d_proj = d_df.select(
@@ -493,10 +454,10 @@ class Cuboid:
             # keys — count_distinct semantics, not NULL
             out = out.withColumn(
                 name, F.coalesce(_col(name), F.lit(0).cast("long")))
-        if dserve:
+        if companions:
             out = out.select(*[_col(r) for r in dd_refs],
-                             *[_col(a.name) for a in storable])
-        return out, list(dd_refs), pairs
+                             *[_col(n) for n in recipes])
+        return out
 
     def _filtered(self, browser: Any, raw: Any, cell: Any) -> tuple:
         """``(context, df)``: a query context over ``raw`` — a table at
@@ -524,38 +485,49 @@ class Cuboid:
         """Can this cuboid serve a query touching ``attribute_refs``
         (drilldown + cell attributes) with ``aggregates``?
 
-        ``allow_partials=False`` disables the algebraic avg
-        reconstruction (the browser passes this under
+        ``allow_partials=False`` serves stored columns only, neither
+        partials nor companion tables (the browser passes this under
         ``coalesce_measures``, where avg ≠ sum/count_nonempty)."""
+        return self._recipes(attribute_refs, aggregates,
+                             requested_grain_refs,
+                             allow_partials) is not None
+
+    def _recipes(self, attribute_refs: Sequence[str],
+                 aggregates: Sequence[Any],
+                 requested_grain_refs: Sequence[str],
+                 allow_partials: bool) -> Optional[dict]:
+        """Aggregate name → how this cuboid serves it (the one serving
+        decision of :meth:`covers` and :meth:`plan`), or None when some
+        touched ref is not in the grain or some aggregate has no recipe.
+
+        A recipe is ``("stored", fn)`` — the stored column through
+        ``F.first`` at the cuboid's own grain, through its
+        :data:`REAGGREGABLE` function above it; ``("distinct", path)``
+        — the companion distinct-key table, at any grain; or a
+        :meth:`partials_for` recipe."""
         if not set(attribute_refs) <= set(self.attribute_refs):
-            return False
+            return None
         exact = set(requested_grain_refs) == set(self.attribute_refs)
-
-        def reconstructable(agg: Any) -> bool:
-            if not allow_partials:
-                return False
-            if self.partials_for(agg) is not None:
-                return True
-            # exact coarser-grain count_distinct via the companion
-            # distinct-key table written at materialization
-            return getattr(agg, "function", None) == "count_distinct" \
-                and agg.name in self.distinct_tables
-
+        recipes: dict = {}
         for agg in aggregates:
-            stored = self.aggregates.get(agg.name)
-            if stored is None:
-                # not materialized itself — servable only if exact
-                # partials reconstruct it (algebraic avg)
-                if not reconstructable(agg):
-                    return False
-                continue
-            if not exact and agg.function not in REAGGREGABLE \
-                    and not reconstructable(agg):
-                return False
-        return True
-
-    def is_exact(self, requested_grain_refs: Sequence[str]) -> bool:
-        return set(requested_grain_refs) == set(self.attribute_refs)
+            stored = agg.name in self.aggregates
+            if stored and exact:
+                # one cuboid row per output group — any stored
+                # aggregate passes through
+                recipe = ("stored", F.first)
+            elif stored and agg.function in REAGGREGABLE:
+                recipe = ("stored", REAGGREGABLE[agg.function])
+            elif not allow_partials:
+                return None
+            elif agg.function == "count_distinct" \
+                    and agg.name in self.distinct_tables:
+                recipe = ("distinct", self.distinct_tables[agg.name])
+            else:
+                recipe = self.partials_for(agg)
+                if recipe is None:
+                    return None
+            recipes[agg.name] = recipe
+        return recipes
 
     def load(self, spark: Any):
         """The cuboid table with SAFE column names (no dots)."""

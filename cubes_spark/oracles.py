@@ -6067,7 +6067,7 @@ def oracle_sql() -> dict[str, str]:
                 CASE WHEN instr(rest, '?') > 0
                      THEN substr(rest, 1, instr(rest, '?') - 1)
                      ELSE rest END AS path0,
-                regexp_extract(rest, '\?(.*)$', 1) AS rq
+                regexp_extract(rest, '\\?(.*)$', 1) AS rq
             FROM parts),
         filt AS (
             SELECT doc_id, scheme, host,
@@ -6239,7 +6239,7 @@ def oracle_sql() -> dict[str, str]:
         c AS (
             SELECT doc_id, text,
                 CASE WHEN trim(text) = '' THEN []
-                     ELSE string_split_regex(trim(text), '\s+') END
+                     ELSE string_split_regex(trim(text), '\\s+') END
                     AS t,
                 str_split(text, chr(10)) AS lines
             FROM d),
@@ -6333,7 +6333,7 @@ def oracle_sql() -> dict[str, str]:
                 list_filter(lines, x -> trim(x) <> ''
                     AND substr(trim(x), -1, 1)
                         IN ('.', '!', '?', '"')
-                    AND len(string_split_regex(trim(x), '\s+')) >= 5
+                    AND len(string_split_regex(trim(x), '\\s+')) >= 5
                     AND NOT contains(lower(trim(x)), 'javascript'))
                     AS kept_l
             FROM l)

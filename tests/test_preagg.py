@@ -842,6 +842,27 @@ class TestDistinctFromCompanion:
         assert "lineitem" not in plan
         assert "__key__" not in plan  # stored value, not the companion
 
+    def test_companion_only_serves_own_grain(self, cd_browser, spark,
+                                             tmp_path):
+        """A descriptor whose count_distinct lives only in its companion
+        table serves it from the companion at the cuboid's own grain."""
+        from cubes_spark.operators.preagg import Cuboid
+
+        b = tpch_workspace(spark, SF_DIR).browser("sales")
+        main = Cuboid.materialize(b, str(tmp_path / "main"),
+                                  ["date@ym:month"],
+                                  ["price_sum", "fact_count"])
+        b.add_cuboid(Cuboid(
+            main.path, main.attribute_refs, list(main.aggregates.values()),
+            distinct_tables=cd_browser._cuboids[0].distinct_tables))
+        request = dict(drilldown=["date@ym:month"],
+                       aggregates=["part_count_distinct", "price_sum"])
+        assert "lineitem" not in plan_of(b.aggregation_dataframe(**request))
+        got = b.aggregate(**request)
+        want = b._fact_only().aggregate(**request)
+        assert got.cells == want.cells
+        assert got.summary == want.summary
+
     def test_coalesce_measures_disables(self, spark, tmp_path):
         b = tpch_workspace(spark, SF_DIR).browser(
             "sales", coalesce_measures=True)
