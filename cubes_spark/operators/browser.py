@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import copy
 from typing import (
-    Any, Callable, Dict, Iterable, List, Optional, Sequence,
+    Any, Callable, Dict, Iterable, List, Optional, Sequence, Union,
 )
 
 from pyspark.sql import Column, DataFrame
@@ -101,7 +101,9 @@ _SUMMARY_ROW = "__summary_row__"
 
 
 class SparkBrowser:
-    """Aggregation browser for one cube over ``{table: DataFrame}``.
+    """Aggregation browser for one cube over its tables: a
+    ``{name: DataFrame}`` dict or a lookup that returns a table's
+    DataFrame by name (``Workspace.browser`` passes ``Workspace.table``).
 
     Options (cube.browser_options or constructor kwargs; parity:
     sql/browser.py:102-190):
@@ -121,7 +123,7 @@ class SparkBrowser:
     def __init__(
         self,
         cube: Cube,
-        tables: Dict[str, DataFrame],
+        tables: Union[Dict[str, DataFrame], Callable[[str], DataFrame]],
         locale: Optional[str] = None,
         naming: Optional[Naming] = None,
         persisted: Optional[Callable[[StarSchema], Optional[DataFrame]]]
@@ -130,7 +132,6 @@ class SparkBrowser:
     ) -> None:
         self.cube = cube
         self.locale = locale
-        self.tables = tables
 
         opts = dict(cube.browser_options or {})
         opts.update(options)
@@ -165,8 +166,9 @@ class SparkBrowser:
             cube, mapper_cls, naming, locale
         )
 
+        table = tables if callable(tables) else tables.__getitem__
         try:
-            fact_df = tables[self.fact_name]
+            fact_df = table(self.fact_name)
         except KeyError:
             raise BrowserError(
                 f"No fact table '{self.fact_name}' in provided tables "
@@ -179,7 +181,7 @@ class SparkBrowser:
             fact_df,
             mappings=self.mappings,
             joins=cube.joins,
-            tables=tables,
+            table=table,
             persisted=persisted,
         )
         self.hierarchies = cube.distilled_hierarchies()
@@ -454,15 +456,12 @@ class SparkBrowser:
         # post-calculated aggregates as native window functions
         specs = calculators_for_aggregates(self.cube, aggregates)
         if specs:
-            # Window order = effective result order: explicit order columns
-            # first, then natural order (parity: the reference streams
-            # calculators over rows in final result order,
+            # Window order = the result order `cols`: explicit order
+            # columns first, then natural order (parity: the reference
+            # streams calculators over rows in final result order,
             # query/browser.py:160-174).
-            window_order = self._order_columns(
-                df.columns, order_spec, drilldown, has_split
-            )
             partition = self._calculator_partition(drilldown, has_split)
-            df = apply_window_calculators(df, specs, window_order, partition)
+            df = apply_window_calculators(df, specs, cols, partition)
         return df
 
     def _aggregation_plan(

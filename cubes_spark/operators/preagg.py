@@ -471,8 +471,7 @@ class Cuboid:
             ref: ColumnRef(None, "cuboid", _safe(ref), None, None, None)
             for ref in self.attribute_refs
         }
-        star = StarSchema("cuboid", "cuboid", raw, mappings=mappings,
-                          joins=[], tables={"cuboid": raw})
+        star = StarSchema("cuboid", "cuboid", raw, mappings=mappings)
         context = QueryContext(
             star, [_Ref(r) for r in self.attribute_refs],
             hierarchies=browser.hierarchies)

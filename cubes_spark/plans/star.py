@@ -224,11 +224,12 @@ def _format_key(key: Tuple[Optional[str], Optional[str]]) -> str:
 
 
 class StarSchema:
-    """Star/snowflake query builder over a dict of DataFrames.
+    """Star/snowflake query builder over DataFrames.
 
     `fact_df` is the fact DataFrame; `mappings` maps logical attribute
     refs to :class:`ColumnRef`; `joins` describe the (snow)flake;
-    `tables` is ``{name: DataFrame}`` for detail tables.
+    `table` returns the DataFrame of a detail table by name (a missing
+    table raises ``KeyError`` or the lookup's own error).
 
     `persisted` — optional callable returning the persisted star of
     this schema (see :meth:`persist_star`) or None; :meth:`get_star`
@@ -242,7 +243,7 @@ class StarSchema:
         fact_df: DataFrame,
         mappings: Dict[str, ColumnRef],
         joins: Optional[Iterable] = None,
-        tables: Optional[Dict[str, DataFrame]] = None,
+        table: Optional[Callable[[str], DataFrame]] = None,
         schema: Optional[str] = None,
         persisted: Optional[Callable[["StarSchema"], Optional[DataFrame]]]
         = None,
@@ -253,8 +254,6 @@ class StarSchema:
         self.mappings = mappings or {}
         self.joins = [to_join(j) for j in (joins or [])]
         self.schema = schema
-        self.table_dataframes = dict(tables or {})
-        self.table_dataframes.setdefault(fact_name, fact_df)
         self.persisted = persisted
 
         # fact table is referenced by None name as well (parity: query.py:344-350)
@@ -290,7 +289,7 @@ class StarSchema:
                     f"Duplicate table reference {_format_key(key)} in star {label}"
                 )
             try:
-                df = self.table_dataframes[name]
+                df = table(name)
             except KeyError:
                 raise NoSuchTableError(
                     f"No table '{name}' for star schema {label}"
@@ -532,10 +531,9 @@ class StarSchema:
             notnull = parts[0].isNotNull()
             for part in parts[1:]:
                 notnull = notnull & part.isNotNull()
-            table_keys = self.table_dataframes[table_ref.name] \
-                .where(notnull).select(
-                    F.lit(table_ref.name).alias("table"),
-                    F.to_json(F.struct(*parts)).alias("key"))
+            table_keys = table_ref.df.where(notnull).select(
+                F.lit(table_ref.name).alias("table"),
+                F.to_json(F.struct(*parts)).alias("key"))
             keys = table_keys if keys is None else keys.unionAll(table_keys)
         duplicates = keys.groupBy("table", "key").count() \
             .where(F.col("count") > 1)

@@ -15,6 +15,7 @@ URLs; here a *store* is a table catalog for Spark:
 
 from __future__ import annotations
 
+import functools
 import itertools
 import json
 import os
@@ -128,6 +129,18 @@ def _nanos_timestamp_columns(location: str) -> list:
         return []
 
 
+def _ntz_as_timestamp(df: DataFrame) -> DataFrame:
+    """`df` with its TIMESTAMP_NTZ columns cast to TIMESTAMP.  Event-time
+    ops (watermarks, windows, unix_micros) require TIMESTAMP, and with
+    the session timezone pinned to UTC the wall-clock values are
+    identical — normalized at the store boundary so mixed-provenance
+    data behaves uniformly."""
+    for fld in df.schema.fields:
+        if fld.dataType.typeName() == "timestamp_ntz":
+            df = df.withColumn(fld.name, F.col(fld.name).cast("timestamp"))
+    return df
+
+
 class ParquetStore:
     """Lazily-loading table catalog over a directory of data files
     (the Spark analogue of the reference's SQL store,
@@ -188,11 +201,7 @@ class ParquetStore:
                   .csv(location))
         else:                                  # .json / .jsonl
             df = self.spark.read.json(location)
-        for fld in df.schema.fields:
-            if fld.dataType.typeName() == "timestamp_ntz":
-                df = df.withColumn(
-                    fld.name, F.col(fld.name).cast("timestamp"))
-        return df
+        return _ntz_as_timestamp(df)
 
     def _read(self, location: str) -> DataFrame:
         """Read parquet, transparently handling TIMESTAMP(NANOS)
@@ -212,8 +221,6 @@ class ParquetStore:
         self.spark.conf.set(
             "spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         nanos_cols = _nanos_timestamp_columns(location)
-        from pyspark.sql import functions as F
-
         if nanos_cols:
             self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong",
                                 "true")
@@ -225,16 +232,8 @@ class ParquetStore:
         # Spark-written parquet EMBEDS its schema in file metadata;
         # a file written from a TIMESTAMP_NTZ frame stays NTZ on read
         # no matter what inferTimestampNTZ says (that conf only
-        # affects *inference* for foreign files).  Event-time ops
-        # (watermarks, windows, unix_micros) require TIMESTAMP, and
-        # with the session timezone pinned to UTC the wall-clock
-        # values are identical — normalize at the store boundary so
-        # mixed-provenance data behaves uniformly.
-        for fld in df.schema.fields:
-            if fld.dataType.typeName() == "timestamp_ntz":
-                df = df.withColumn(
-                    fld.name, F.col(fld.name).cast("timestamp"))
-        return df
+        # affects *inference* for foreign files)
+        return _ntz_as_timestamp(df)
 
     def __getitem__(self, name: str) -> DataFrame:
         return self.table(name)
@@ -413,18 +412,7 @@ class Workspace:
         from cubes_spark.sources.slicer import SlicerHTTPStore
 
         self._drop_stars()
-
-        if isinstance(store, str):
-            store = ParquetStore(self.spark, store, self.naming)
-        elif isinstance(store, dict):
-            options = dict(store)
-            type_ = options.pop("type", "parquet")
-            if type_ in ("parquet", "spark"):
-                store = ParquetStore(self.spark, options["path"],
-                                     self.naming)
-            else:
-                from cubes_spark import ext
-                store = ext.store.create(type_, **options)
+        store = self._open_store(store)
         if not isinstance(store, (ParquetStore, SlicerHTTPStore)):
             raise ArgumentError(f"Unknown store: {store!r}")
         if isinstance(store, SlicerHTTPStore):
@@ -476,35 +464,40 @@ class Workspace:
 
     # -- stores / tables ---------------------------------------------------
 
+    def _open_store(self, spec: Any) -> Any:
+        """The store `spec` names: a path or a ``{"type": "parquet" |
+        "spark", "path": ...}`` dict (type defaults to parquet) opens a
+        ParquetStore, another typed dict goes through the store
+        extension registry (parity: reference slicer.ini [store]
+        type=...), anything else is returned as it is."""
+        if isinstance(spec, str):
+            spec = {"path": spec}
+        if not isinstance(spec, dict):
+            return spec
+        options = dict(spec)
+        type_ = options.pop("type", "parquet")
+        if type_ in ("parquet", "spark"):
+            return ParquetStore(self.spark, options["path"], self.naming)
+        from cubes_spark import ext
+        return ext.store.create(type_, **options)
+
     def set_store(self, store: Any) -> None:
+        """The default store (see :meth:`_open_store`), or an untyped
+        ``{name: DataFrame}`` dict of tables.  A remote ``type: slicer``
+        store auto-imports the remote model, matching the reference's
+        related_model_provider UX."""
+        from cubes_spark.sources.slicer import SlicerHTTPStore
+
         self._drop_stars()
-        if isinstance(store, str):
-            self.store = ParquetStore(self.spark, store, self.naming)
-        elif isinstance(store, ParquetStore):
-            self.store = store
-        elif isinstance(store, dict) and "type" in store:
-            # typed store config (parity: reference slicer.ini
-            # [store] type=...).  A remote `type: slicer` default
-            # store auto-imports the remote model, matching the
-            # reference's related_model_provider UX
-            options = dict(store)
-            type_ = options.pop("type")
-            if type_ in ("parquet", "spark"):
-                self.store = ParquetStore(self.spark, options["path"],
-                                          self.naming)
-                return
-            from cubes_spark import ext
-            from cubes_spark.sources.slicer import SlicerHTTPStore
-            obj = ext.store.create(type_, **options)
-            if isinstance(obj, SlicerHTTPStore):
-                self.stores.setdefault("slicer", obj)
-                self.import_slicer(obj)
-            else:
-                raise ArgumentError(
-                    f"Store type '{type_}' resolved to {obj!r}, "
-                    "which this workspace cannot serve tables from")
-        elif isinstance(store, dict):
+        if isinstance(store, dict) and "type" not in store:
             self._tables.update(store)
+            return
+        opened = self._open_store(store)
+        if isinstance(opened, ParquetStore):
+            self.store = opened
+        elif isinstance(store, dict) and isinstance(opened, SlicerHTTPStore):
+            self.stores.setdefault("slicer", opened)
+            self.import_slicer(opened)
         else:
             raise ArgumentError(f"Unknown store: {store!r}")
 
@@ -519,6 +512,7 @@ class Workspace:
         config-loaded workspaces (server, CLI) resolve them too.
         Evaluated lazily through Catalyst: filters/projections inside
         the expression push into the parquet scan like any view."""
+        self._drop_stars()
         self._table_expressions[name] = sql
 
     def table(self, name: str, store: Optional[str] = None) -> DataFrame:
@@ -585,38 +579,6 @@ class Workspace:
             if referenced(tname):
                 df.createOrReplaceTempView(tname)
         return self.spark.sql(sql)
-
-    def tables_for_cube(self, cube: Cube) -> Dict[str, DataFrame]:
-        """Collect the DataFrames a cube's star needs (fact + all join
-        details)."""
-        names = set()
-        aliases = set()
-        fact = cube.fact or self.naming.fact_table_name(cube.name)
-        names.add(fact)
-        for join in cube.joins or []:
-            if isinstance(join, dict):
-                detail = join.get("detail")
-                alias = join.get("alias")
-            else:
-                detail = join[1]
-                alias = join[2] if len(join) > 2 else None
-            if alias:
-                aliases.add(alias)
-            if isinstance(detail, str):
-                names.add(detail.split(".")[-2] if detail.count(".") >= 1
-                          else detail)
-            elif isinstance(detail, dict):
-                names.add(detail["table"])
-        # also tables referenced in explicit mappings (skip join aliases)
-        for mapping in (cube.mappings or {}).values():
-            if isinstance(mapping, str):
-                parts = mapping.split(".")
-                if len(parts) >= 2:
-                    names.add(parts[-2])
-            elif isinstance(mapping, dict) and mapping.get("table"):
-                names.add(mapping["table"])
-        return {name: self.table(name, store=cube.store)
-                for name in names if name not in aliases}
 
     # -- model -------------------------------------------------------------
 
@@ -824,9 +786,9 @@ class Workspace:
         bound = getattr(cube, "store", None)
         if isinstance(bound, SlicerHTTPStore):
             return SlicerBrowser(cube, bound, locale=locale, **options)
-        tables = self.tables_for_cube(cube)
         return SparkBrowser(
-            cube, tables, locale=locale, naming=self.naming,
+            cube, functools.partial(self.table, store=cube.store),
+            locale=locale, naming=self.naming,
             persisted=self._star_source(cube.name), **options
         )
 
@@ -858,8 +820,9 @@ class Workspace:
                 continue
             # no persisted star: the view stays a lazy plan
             cube = self.cube(name)
-            browser = SparkBrowser(cube, self.tables_for_cube(cube),
-                                   naming=self.naming)
+            browser = SparkBrowser(
+                cube, functools.partial(self.table, store=cube.store),
+                naming=self.naming)
             view = prefix + name.replace(".", "__")
             safe_columns(browser.denormalized_dataframe()) \
                 .createOrReplaceTempView(view)

@@ -156,6 +156,30 @@ def test_denormalized_roundtrip_browsing(tpch_browser, spark, tmp_path):
     assert got.summary == want.summary
 
 
+def test_denormalized_fact_named_by_the_naming(spark, tmp_path):
+    """A cube without ``fact`` browses its denormalized table under the
+    naming's denormalized prefix, the table DenormalizedMapper maps."""
+    from cubes_spark.sources.workspace import Workspace
+
+    spark.createDataFrame([("A", 1.5), ("B", 2.0), ("A", 4.0)],
+                          ["flag__flag", "amount"]) \
+        .write.parquet(os.path.join(str(tmp_path), "mft_sales.parquet"))
+    ws = Workspace(spark, store=str(tmp_path),
+                   naming={"denormalized_prefix": "mft_"})
+    ws.import_model({"cubes": [{
+        "name": "sales",
+        "dimensions": ["flag"],
+        "measures": ["amount"],
+        "aggregates": [{"name": "amount_sum", "function": "sum",
+                        "measure": "amount"}],
+    }]})
+    result = ws.browser("sales", use_denormalization=True).aggregate(
+        drilldown=["flag"], aggregates=["amount_sum"])
+    assert result.summary == {"amount_sum": 7.5}
+    assert sorted((c["flag.flag"], c["amount_sum"]) for c in result.cells) == \
+        [("A", 5.5), ("B", 2.0)]
+
+
 def test_refresh_aggregate_incremental(tpch_browser, spark, tmp_path):
     """Cuboid built from the <=1995 slice + incremental 1996 delta ==
     cuboid built from the <=1996 slice in one shot."""

@@ -3,6 +3,7 @@ by ``Workspace``): its gates, each falling back to the join-pruned
 answer, its lifecycle on the workspace, and answers identical to the
 lazy star's."""
 
+import functools
 import gc
 import threading
 
@@ -49,14 +50,19 @@ FACTS = [(1, "a", 10), (2, "b", 20), (3, "b", 30)]
 DIM = [("a", "Alpha"), ("b", "Beta"), ("c", "Gamma")]
 
 
-def thing_workspace(spark, tmp_path, facts=FACTS, dim=DIM, method="match"):
-    """Workspace over parquet copies of the fixture (a parquet scan has
-    a Catalyst size estimate; an in-memory DataFrame has none)."""
+def write_things(spark, path, facts=FACTS, dim=DIM):
+    """Parquet copies of the fixture in `path` (a parquet scan has a
+    Catalyst size estimate; an in-memory DataFrame has none)."""
     spark.createDataFrame(facts, ["id", "code", "amount"]) \
-        .write.parquet(str(tmp_path / "facts.parquet"))
+        .write.parquet(str(path / "facts.parquet"))
     spark.createDataFrame(dim, ["code", "name"]) \
-        .write.parquet(str(tmp_path / "dim_thing.parquet"))
-    return Workspace(spark, store=str(tmp_path), model=thing_model(method))
+        .write.parquet(str(path / "dim_thing.parquet"))
+    return str(path)
+
+
+def thing_workspace(spark, tmp_path, facts=FACTS, dim=DIM, method="match"):
+    return Workspace(spark, store=write_things(spark, tmp_path, facts, dim),
+                     model=thing_model(method))
 
 
 def by_thing(browser):
@@ -70,7 +76,14 @@ def by_thing(browser):
 def lazy_browser(ws, name):
     """A browser of the same cube without the persisted star."""
     cube = ws.cube(name)
-    return SparkBrowser(cube, ws.tables_for_cube(cube), naming=ws.naming)
+    return SparkBrowser(cube, functools.partial(ws.table, store=cube.store),
+                        naming=ws.naming)
+
+
+def thing_names(browser):
+    result = browser.aggregate(drilldown=["thing"],
+                               aggregates=["fact_count"])
+    return sorted(c["thing.name"] for c in result.cells)
 
 
 def reads_star(df):
@@ -179,7 +192,9 @@ class TestLifecycle:
         assert len(persists) == 1
         assert answers == [by_thing(lazy_browser(ws, "sales"))] * 4
 
-    @pytest.mark.parametrize("change", ["add_table", "import_model"])
+    @pytest.mark.parametrize("change", [
+        "register_store", "set_store", "add_table", "add_table_expression",
+        "import_model", "add_cube"])
     def test_dropped_when_the_model_or_tables_change(self, spark, tmp_path,
                                                      change):
         ws = thing_workspace(spark, tmp_path)
@@ -188,21 +203,35 @@ class TestLifecycle:
         star = before.star_schema.get_star(["thing.code"])
         assert star.storageLevel != StorageLevel.NONE
 
-        if change == "add_table":
+        renamed, names = [("a", "X"), ("b", "Y")], ["X", "Y"]
+        other = tmp_path / "other"
+        if change == "register_store":
+            ws.register_store("default", write_things(spark, other,
+                                                      dim=renamed))
+        elif change == "set_store":
+            ws.set_store(write_things(spark, other, dim=renamed))
+        elif change == "add_table":
             ws.add_table("dim_thing", spark.createDataFrame(
-                [("a", "Alpha"), ("b", "Beta"), ("b", "Beta again")],
-                ["code", "name"]))
-            want = [("a", 1, 10), ("b", 2, 50), ("b", 2, 50)]
-        else:
+                renamed, ["code", "name"]))
+        elif change == "add_table_expression":
+            ws.add_table_expression(
+                "dim_thing", "SELECT * FROM VALUES ('a', 'X'), ('b', 'Y')"
+                             " AS t(code, name)")
+        elif change == "import_model":
             ws.import_model(thing_model("detail"), namespace="other")
-            want = [("a", 1, 10), ("b", 2, 50)]
+            names = ["Alpha", "Beta"]
+        else:
+            ws.add_cube(ws.cube("sales"))
+            names = ["Alpha", "Beta"]
+
         assert star.storageLevel == StorageLevel.NONE
         assert ws._stars == {}
-        assert by_thing(ws.browser("sales"))[1] == want
+        got = thing_names(ws.browser("sales"))
+        assert got == thing_names(lazy_browser(ws, "sales")) == names
+        assert reads_star(thing_plan(ws.browser("sales")))
         if change == "import_model":
             assert by_thing(ws.browser("other.sales"))[1] == \
                 [("a", 1, 10), ("b", 2, 50), ("c", 1, None)]
-            assert reads_star(thing_plan(ws.browser("sales")))
         # a browser made before the change does not bring the star back
         assert not reads_star(thing_plan(before))
 
