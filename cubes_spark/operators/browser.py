@@ -494,19 +494,22 @@ class SparkBrowser:
         attributes.update(a.ref for a in cell.all_attributes)
         if split:
             attributes.update(a.ref for a in split.all_attributes)
+        fact_refs = {a.ref for a in self.cube.all_fact_attributes}
+        measure_refs = set()
         for agg in aggregates:
-            if agg.measure and agg.function not in CALCULATED_AGGREGATIONS:
-                attributes.add(agg.measure)
+            if agg.function in CALCULATED_AGGREGATIONS:
+                continue
+            if agg.measure:
+                measure_refs.add(agg.measure)
             if agg.expression:
-                attributes.update(
-                    d for d in agg.dependencies
-                    if d in {a.ref for a in self.cube.all_fact_attributes}
-                )
+                measure_refs.update(
+                    d for d in agg.dependencies if d in fact_refs)
             if not agg.function and not agg.expression:
                 # pre-aggregated (base) aggregate: the physical column of
                 # the same name must be projected so F.sum over it
                 # resolves (reference maps it like any base attribute)
-                attributes.add(agg.name)
+                measure_refs.add(agg.name)
+        attributes.update(measure_refs)
 
         context = self.aggregation_context(attributes)
 
@@ -517,19 +520,6 @@ class SparkBrowser:
         #    its logical name (Catalyst prunes the parquet scan to these)
         group_refs = [a.ref for a in dd_attributes]
         projected_refs = list(dict.fromkeys(group_refs))  # preserve order
-
-        measure_refs = set()
-        for agg in aggregates:
-            if agg.function in CALCULATED_AGGREGATIONS:
-                continue
-            if agg.measure:
-                measure_refs.add(agg.measure)
-            if agg.expression:
-                measure_refs.update(
-                    d for d in agg.dependencies if d in context.attributes
-                )
-            if not agg.function and not agg.expression:
-                measure_refs.add(agg.name)
         if self.options.get("coalesce_measures") and self.cube.key \
                 and self.cube.key in context.attributes:
             measure_refs.add(self.cube.key)

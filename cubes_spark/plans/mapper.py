@@ -148,21 +148,14 @@ class Mapper:
             locale = self.locale if self.locale in locales else locales[0]
             column_name = f"{column_name}_{locale}"
 
-        schema, table = self.attribute_table(attribute)
-        return to_column((schema, table, column_name))
+        return to_column((self.attribute_table(attribute), column_name))
 
-    def attribute_table(self, attribute: Any) -> Tuple[Optional[str], str]:
+    def attribute_table(self, attribute: Any) -> str:
         dimension = getattr(attribute, "dimension", None)
-        if dimension is not None:
-            schema = self.naming["dimension_schema"] or self.naming["schema"]
-            if dimension.is_flat and not dimension.has_details:
-                table = self.fact_name
-            else:
-                table = self.naming.dimension_table_name(dimension.name)
-        else:
-            table = self.fact_name
-            schema = self.naming["fact_schema"] or self.naming["schema"]
-        return schema, table
+        if dimension is None or \
+                (dimension.is_flat and not dimension.has_details):
+            return self.fact_name
+        return self.naming.dimension_table_name(dimension.name)
 
 
 class StarSchemaMapper(Mapper):
@@ -190,12 +183,7 @@ class StarSchemaMapper(Mapper):
             mapping = self.mappings[attribute.name]
 
         if mapping is not None:
-            default_schema = self.naming["schema"]
-            return to_column(
-                mapping,
-                default_table=self.fact_name,
-                default_schema=default_schema,
-            )
+            return to_column(mapping, default_table=self.fact_name)
         return super().__getitem__(attribute)
 
 
@@ -212,9 +200,8 @@ class DenormalizedMapper(Mapper):
         self.fact_name = cube.fact or naming.denormalized_table_name(cube.name)
 
     def __getitem__(self, attribute: Any) -> ColumnRef:
-        schema = self.naming["fact_schema"] or self.naming["schema"]
         column = attribute.ref.replace(".", "__")
-        return to_column((schema, self.fact_name, column))
+        return to_column((self.fact_name, column))
 
 
 def map_base_attributes(

@@ -33,8 +33,10 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import functools
+import operator
 from collections import namedtuple
-from typing import Any, Callable, Dict, Iterable, List, Optional, Set, Tuple
+from typing import Any, Callable, Dict, Iterable, List, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -76,7 +78,8 @@ class NoSuchAttributeError(SchemaError):
 
 
 #: Physical column reference (parity: sql/query.py:51-52). ``schema`` is
-#: kept for model compatibility but unused in Spark (flat catalog).
+#: kept for model compatibility but unused: a cube's store is one flat
+#: catalog, so a table is named by its name alone.
 #: ``cast`` is a Spark extension: an optional DDL type the physical
 #: column is cast to on read (e.g. ``decimal(25,6)`` for exact,
 #: order-independent monetary sums at any parallelism).
@@ -93,14 +96,10 @@ JoinKey = namedtuple("JoinKey", ["schema", "table", "column"])
 #: (parity: sql/query.py:176-187)
 Join = namedtuple("Join", ["master", "detail", "alias", "method"])
 
-_TableRef = namedtuple(
-    "_TableRef",
-    ["schema", "name", "alias", "key", "df", "join"],
-)
+_TableRef = namedtuple("_TableRef", ["name", "alias", "df", "join"])
 
 
-def to_column(obj: Any, default_table: Optional[str] = None,
-              default_schema: Optional[str] = None) -> ColumnRef:
+def to_column(obj: Any, default_table: Optional[str] = None) -> ColumnRef:
     """Create ColumnRef from string ``table.column``, tuple or dict
     (parity: sql/query.py:64-112)."""
     if obj is None:
@@ -141,7 +140,7 @@ def to_column(obj: Any, default_table: Optional[str] = None,
         function = obj.function
         cast = getattr(obj, "cast", None)
 
-    return ColumnRef(schema or default_schema, table or default_table,
+    return ColumnRef(schema, table or default_table,
                      column, extract, function, cast)
 
 
@@ -217,10 +216,9 @@ def _key_columns(key: JoinKey) -> tuple:
         else (columns,)
 
 
-def _format_key(key: Tuple[Optional[str], Optional[str]]) -> str:
-    schema, table = key
-    table = table or "(FACT)"
-    return f"{schema}.{table}" if schema else table
+def _all(conditions: List[Column]) -> Column:
+    """The AND of `conditions`, folded left-deep."""
+    return functools.reduce(operator.and_, conditions)
 
 
 class StarSchema:
@@ -244,7 +242,6 @@ class StarSchema:
         mappings: Dict[str, ColumnRef],
         joins: Optional[Iterable] = None,
         table: Optional[Callable[[str], DataFrame]] = None,
-        schema: Optional[str] = None,
         persisted: Optional[Callable[["StarSchema"], Optional[DataFrame]]]
         = None,
     ) -> None:
@@ -253,22 +250,13 @@ class StarSchema:
         self.fact_df = fact_df
         self.mappings = mappings or {}
         self.joins = [to_join(j) for j in (joins or [])]
-        self.schema = schema
         self.persisted = persisted
 
-        # fact table is referenced by None name as well (parity: query.py:344-350)
-        self._tables: Dict[Tuple[Optional[str], Optional[str]], _TableRef] = {}
-
-        fact_ref = _TableRef(
-            schema=schema,
-            name=fact_name,
-            alias=fact_name,
-            key=(schema, fact_name),
-            df=fact_df.alias(fact_name),
-            join=None,
-        )
-        self._tables[(schema, fact_name)] = fact_ref
-        self._tables[(schema, None)] = fact_ref
+        # tables by alias; the fact also by None (parity: query.py:344-350)
+        fact_ref = _TableRef(name=fact_name, alias=fact_name,
+                             df=fact_df.alias(fact_name), join=None)
+        self._tables: Dict[Optional[str], _TableRef] = {
+            fact_name: fact_ref, None: fact_ref}
 
         # Collect all tables from joins (parity: query.py:392-473)
         for join in self.joins:
@@ -283,10 +271,9 @@ class StarSchema:
                 )
             name = join.detail.table
             alias = join.alias or name
-            key = (join.detail.schema or schema, alias)
-            if key in self._tables:
+            if alias in self._tables:
                 raise ModelError(
-                    f"Duplicate table reference {_format_key(key)} in star {label}"
+                    f"Duplicate table reference {alias} in star {label}"
                 )
             try:
                 df = table(name)
@@ -294,32 +281,21 @@ class StarSchema:
                 raise NoSuchTableError(
                     f"No table '{name}' for star schema {label}"
                 )
-            self._tables[key] = _TableRef(
-                schema=join.detail.schema or schema,
-                name=name,
-                alias=alias,
-                key=key,
-                df=df.alias(alias),
-                join=join,
-            )
+            self._tables[alias] = _TableRef(name=name, alias=alias,
+                                            df=df.alias(alias), join=join)
 
         self._column_cache: Dict[str, Column] = {}
 
     # -- table access ---------------------------------------------------
 
-    def table(self, key: Tuple[Optional[str], Optional[str]]) -> _TableRef:
-        if not isinstance(key, tuple):
-            key = (self.schema, key)
+    def table(self, alias: Optional[str]) -> _TableRef:
+        """The table joined as `alias`; None is the fact."""
         try:
-            return self._tables[key]
+            return self._tables[alias]
         except KeyError:
             raise NoSuchTableError(
-                f"Unknown table {_format_key(key)} in star {self.label}"
+                f"Unknown table {alias} in star {self.label}"
             )
-
-    @property
-    def physical_tables(self) -> List[_TableRef]:
-        return [ref for key, ref in self._tables.items() if key[1] is not None]
 
     # -- attribute columns -----------------------------------------------
 
@@ -339,7 +315,7 @@ class StarSchema:
             return self._column_cache[ref]
 
         mapping = self.mapping_for(ref)
-        table_ref = self.table((mapping.schema or self.schema, mapping.table))
+        table_ref = self.table(mapping.table)
         column = F.col(f"{table_ref.alias}.`{mapping.column}`")
 
         if mapping.cast:
@@ -364,69 +340,49 @@ class StarSchema:
         """Tables required for `attributes`, topologically sorted
         master→detail (parity: query.py:606-676)."""
         # tables directly referenced by attribute mappings
-        relevant: Set[Tuple[Optional[str], Optional[str]]] = set()
-        for ref in attributes:
-            mapping = self.mapping_for(ref)
-            relevant.add((mapping.schema or self.schema, mapping.table))
-        return self._sorted_tables(relevant)
+        return self._sorted_tables(
+            {self.mapping_for(ref).table for ref in attributes})
 
-    def _sorted_tables(self, relevant: Iterable[Tuple]) -> List[_TableRef]:
-        """The fact, the tables at keys `relevant` and every master they
-        join through, master before detail."""
-        # fact is always there
-        fact_key = (self.schema, self.fact_name)
-        relevant = set(relevant) | {fact_key}
-
-        # transitive closure over join masters
-        required: Dict[Tuple, _TableRef] = {}
-        queue = [self.table(key) for key in relevant]
+    def _sorted_tables(self, relevant: Iterable[Optional[str]]
+                       ) -> List[_TableRef]:
+        """The fact, the tables joined as `relevant` and every master
+        they join through: master before detail, else in the order of
+        the joins."""
+        # transitive closure over join masters; the fact is always there
+        required = {self.fact_name}
+        queue = [self.table(alias) for alias in relevant]
         while queue:
             table_ref = queue.pop()
-            if table_ref.key in required:
-                continue
-            required[table_ref.key] = table_ref
-            if table_ref.join is not None:
-                master_key = (
-                    table_ref.join.master.schema or self.schema,
-                    table_ref.join.master.table or self.fact_name,
-                )
-                queue.append(self.table(master_key))
+            if table_ref.alias not in required:
+                required.add(table_ref.alias)
+                queue.append(self.table(self._master_alias(table_ref)))
 
         # topological sort: master before detail (parity: query.py:652-676)
-        fact = self.table(fact_key)
-        sorted_refs: List[_TableRef] = []
-        emitted: Set[Tuple] = set()
-        pending = {k: v for k, v in required.items()}
-
-        def master_of(tref: _TableRef) -> Optional[Tuple]:
-            if tref.join is None:
-                return None
-            return (
-                tref.join.master.schema or self.schema,
-                tref.join.master.table or self.fact_name,
-            )
-
-        sorted_refs.append(fact)
-        emitted.add(fact.key)
-        pending.pop(fact.key, None)
+        sorted_refs = [self.table(self.fact_name)]
+        emitted = {self.fact_name}
+        pending = [ref for alias, ref in self._tables.items()
+                   if alias in required and ref.join is not None]
         progress = True
         while pending and progress:
             progress = False
-            for key in list(pending):
-                tref = pending[key]
-                master = master_of(tref)
-                if master is None or master in emitted:
+            for tref in list(pending):
+                if self._master_alias(tref) in emitted:
                     sorted_refs.append(tref)
-                    emitted.add(key)
-                    del pending[key]
+                    emitted.add(tref.alias)
+                    pending.remove(tref)
                     progress = True
         if pending:
-            names = ", ".join(_format_key(k) for k in pending)
+            names = ", ".join(tref.alias for tref in pending)
             raise ModelError(
                 f"Can not sort tables for star {self.label}; "
                 f"unresolved master links for: {names}"
             )
         return sorted_refs
+
+    def _master_alias(self, table_ref: _TableRef) -> str:
+        """Alias of the table `table_ref` joins to: the fact by
+        default."""
+        return table_ref.join.master.table or self.fact_name
 
     # -- the star ---------------------------------------------------------
 
@@ -448,31 +404,24 @@ class StarSchema:
             join = table_ref.join
             if join is None:  # pragma: no cover - guarded by required_tables
                 raise ModelError(
-                    f"Missing join for table {_format_key(table_ref.key)}"
+                    f"Missing join for table {table_ref.alias}"
                 )
 
             # master column(s)
-            master_key = (
-                join.master.schema or self.schema,
-                join.master.table or self.fact_name,
-            )
-            master = self.table(master_key)
+            master = self.table(self._master_alias(table_ref))
 
             master_cols = _key_columns(join.master)
             detail_cols = _key_columns(join.detail)
             if len(master_cols) != len(detail_cols):
                 raise ModelError(
                     f"Compound key size mismatch in join for "
-                    f"{_format_key(table_ref.key)}"
+                    f"{table_ref.alias}"
                 )
 
-            conditions = [
+            condition = _all([
                 F.col(f"{master.alias}.`{mc}`") == F.col(f"{table_ref.alias}.`{dc}`")
                 for mc, dc in zip(master_cols, detail_cols)
-            ]
-            condition = conditions[0]
-            for cond in conditions[1:]:
-                condition = condition & cond
+            ])
 
             method = join.method or "match"
             if method == "match":
@@ -513,8 +462,7 @@ class StarSchema:
         if threshold < 0 or int(size) > threshold:
             return None
 
-        tables = self._sorted_tables(
-            key for key in self._tables if key[1] is not None)
+        tables = self._sorted_tables(self._tables)
         star = self._join(tables).withColumn(STAR_MARKER, F.lit(build))
         star.persist()
 
@@ -528,9 +476,7 @@ class StarSchema:
                 continue
             checked.add((table_ref.name, columns))
             parts = [F.col(f"`{c}`") for c in columns]
-            notnull = parts[0].isNotNull()
-            for part in parts[1:]:
-                notnull = notnull & part.isNotNull()
+            notnull = _all([part.isNotNull() for part in parts])
             table_keys = table_ref.df.where(notnull).select(
                 F.lit(table_ref.name).alias("table"),
                 F.to_json(F.struct(*parts)).alias("key"))
@@ -616,11 +562,7 @@ class QueryContext:
         """AND of all cut conditions (parity: query.py:940-949)."""
         if not cell or not cell.cuts:
             return None
-        conditions = self.conditions_for_cuts(cell.cuts)
-        result = conditions[0]
-        for cond in conditions[1:]:
-            result = result & cond
-        return result
+        return _all(self.conditions_for_cuts(cell.cuts))
 
     def conditions_for_cuts(self, cuts: Iterable) -> List[Column]:
         """Parity: query.py:951-993."""
@@ -691,7 +633,7 @@ class QueryContext:
                 return None
             if mapping.extract not in ("year", "month", "day"):
                 return None
-            key = (mapping.schema, mapping.table, mapping.column)
+            key = (mapping.table, mapping.column)
             if column_key is None:
                 column_key = key
             elif key != column_key:
@@ -721,10 +663,8 @@ class QueryContext:
         else:
             upper = datetime(year + 1, 1, 1)
 
-        table_ref = self.star_schema.table(
-            (column_key[0] or self.star_schema.schema, column_key[1])
-        )
-        raw = F.col(f"{table_ref.alias}.`{column_key[2]}`")
+        table_ref = self.star_schema.table(column_key[0])
+        raw = F.col(f"{table_ref.alias}.`{column_key[1]}`")
         return raw, lower, upper
 
     def condition_for_point(self, dim: str, path: list,
@@ -740,12 +680,7 @@ class QueryContext:
         if bounds is not None:
             raw, lower, upper = bounds
             conditions.append((raw >= F.lit(lower)) & (raw < F.lit(upper)))
-        if not conditions:
-            condition = F.lit(True)
-        else:
-            condition = conditions[0]
-            for cond in conditions[1:]:
-                condition = condition & cond
+        condition = _all(conditions) if conditions else F.lit(True)
         if invert:
             condition = ~condition
         return condition
@@ -769,12 +704,7 @@ class QueryContext:
         if to_bounds is not None:
             raw, _, up = to_bounds
             conditions.append(raw < F.lit(up))
-        if not conditions:
-            condition = F.lit(True)
-        else:
-            condition = conditions[0]
-            for cond in conditions[1:]:
-                condition = condition & cond
+        condition = _all(conditions) if conditions else F.lit(True)
         if invert:
             condition = ~condition
         return condition
@@ -802,9 +732,7 @@ class QueryContext:
         else:  # lower bound
             conditions.append(column >= value if first else column > value)
 
-        condition = conditions[0]
-        for cond in conditions[1:]:
-            condition = condition & cond
+        condition = _all(conditions)
 
         if last is not None:
             condition = condition | last

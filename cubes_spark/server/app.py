@@ -143,14 +143,17 @@ def _not_authenticated(error: NotAuthenticated) -> Response:
                  401)
 
 
-def _browser(cube_name: str):
-    workspace = _workspace()
-    cube = workspace.cube(cube_name)
-    authorizer = _authorizer()
-    identity = _identity()
-    if not authorizer.authorize(identity, [cube.name]):
+def _cube(cube_name: str):
+    """The cube `cube_name`, when the identity may browse it."""
+    cube = _workspace().cube(cube_name)
+    if not _authorizer().authorize(_identity(), [cube.name]):
         raise NotAuthorized(f"Not authorized for cube '{cube_name}'")
-    return workspace.browser(cube), cube
+    return cube
+
+
+def _browser(cube_name: str):
+    cube = _cube(cube_name)
+    return _workspace().browser(cube), cube
 
 
 def _restricted_cell(cube, browser, cell_arg: Optional[str]):
@@ -383,7 +386,7 @@ def list_cubes() -> Response:
 
 @slicer.route("/cube/<cube_name>/model")
 def cube_model(cube_name: str) -> Response:
-    _, cube = _browser(cube_name)      # authorization + existence
+    cube = _cube(cube_name)
     lang = request.args.get("lang")
     if lang:
         cube = _workspace().cube(cube_name, locale=lang)

@@ -21,7 +21,7 @@ import json
 import os
 import threading
 import weakref
-from typing import Any, Dict, Iterable, Optional
+from typing import Any, Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -273,6 +273,19 @@ def _unpersist_stars(stars: Dict[tuple, Optional[DataFrame]]) -> None:
     stars.clear()
 
 
+def _catalog_change(method):
+    """A Workspace method that changes the catalog: the drop follows the
+    change, also one that fails part-way, so nothing built between the
+    two outlives it."""
+    @functools.wraps(method)
+    def change(self, *args, **kwargs):
+        try:
+            return method(self, *args, **kwargs)
+        finally:
+            self._drop_stars()
+    return change
+
+
 def read_model(metadata: Any) -> dict:
     """Load model metadata from a dict, JSON file path or a bundle
     directory.  A bundle holds ``model.json`` plus per-object
@@ -372,14 +385,11 @@ class Workspace:
         self.naming = Naming(naming or {})
 
         # model registry: a hierarchy of namespaces (parity:
-        # namespace.py wiring in reference workspace.py:55-657); the
-        # legacy _dimensions/_cubes names alias the ROOT namespace's
-        # registries so single-namespace usage is unchanged
+        # namespace.py wiring in reference workspace.py:55-657)
         self.root = Namespace()
-        self._dimensions: Dict[str, Dimension] = self.root.dimensions
-        self._cubes: Dict[str, Cube] = self.root.cubes
-        self._tables: Dict[str, DataFrame] = {}
-        self._table_expressions: Dict[str, str] = {}
+        #: the latest registration of each table name: a DataFrame, or
+        #: the SQL of a table expression
+        self._tables: Dict[str, Any] = {}
         self.store: Optional[ParquetStore] = None
         #: named stores beyond the default (parity: reference
         #: workspace.py store_infos / get_store; a cube's ``store``
@@ -387,14 +397,18 @@ class Workspace:
         self.stores: Dict[str, ParquetStore] = {}
         #: each cube's persisted star, or None where its gates fail
         #: (plans/star.py StarSchema.persist_star), keyed by (cube,
-        #: fact).  Built on a request's first need under the lock;
-        #: dropped when models, tables or stores change and when the
-        #: workspace is collected (not at exit: the cache ends with the
-        #: process).  The generation tells browsers made before a drop
-        #: that the stars are not theirs.
+        #: fact), and each evaluated table expression, by (name, sql).
+        #: Built on first need under the lock (re-entered by an
+        #: expression that references another; a cached expression is
+        #: read without it); dropped after models, tables or stores
+        #: change, and the stars also when the workspace is collected
+        #: (not at exit: the cache ends with the process).
+        #: The generation tells browsers made before a drop that the
+        #: stars are not theirs.
         self._stars: Dict[tuple, Optional[DataFrame]] = {}
-        self._star_lock = threading.Lock()
-        self._star_generation = 0
+        self._expressions: Dict[tuple, Optional[DataFrame]] = {}
+        self._lock = threading.RLock()
+        self._generation = 0
         weakref.finalize(self, _unpersist_stars,
                          self._stars).atexit = False
 
@@ -403,6 +417,7 @@ class Workspace:
         if model is not None:
             self.import_model(model)
 
+    @_catalog_change
     def register_store(self, name: str, store: Any) -> None:
         """Register a named store (path, ParquetStore, a remote
         SlicerHTTPStore, or a ``{"type": ..., ...}`` dict resolved via
@@ -411,7 +426,6 @@ class Workspace:
         _register_store_dict)."""
         from cubes_spark.sources.slicer import SlicerHTTPStore
 
-        self._drop_stars()
         store = self._open_store(store)
         if not isinstance(store, (ParquetStore, SlicerHTTPStore)):
             raise ArgumentError(f"Unknown store: {store!r}")
@@ -440,21 +454,22 @@ class Workspace:
     # -- persisted stars ---------------------------------------------------
 
     def _drop_stars(self) -> None:
-        """Unpersist every cube's star; the next request that needs a
-        join builds it again."""
-        with self._star_lock:
-            self._star_generation += 1
+        """Unpersist every cube's star and forget every evaluated table
+        expression; the next request that needs one builds it again."""
+        with self._lock:
+            self._generation += 1
             _unpersist_stars(self._stars)
+            self._expressions.clear()
 
     def _star_source(self, cube_name: str):
         """``persisted`` callable of a browser of `cube_name`: the
         cube's star, built once by the first request that needs it."""
-        generation = self._star_generation
+        generation = self._generation
 
         def persisted(schema: Any) -> Optional[DataFrame]:
             key = (cube_name, schema.fact_name)
-            with self._star_lock:
-                if generation != self._star_generation:
+            with self._lock:
+                if generation != self._generation:
                     return None
                 if key not in self._stars:
                     self._stars[key] = schema.persist_star(
@@ -481,6 +496,7 @@ class Workspace:
         from cubes_spark import ext
         return ext.store.create(type_, **options)
 
+    @_catalog_change
     def set_store(self, store: Any) -> None:
         """The default store (see :meth:`_open_store`), or an untyped
         ``{name: DataFrame}`` dict of tables.  A remote ``type: slicer``
@@ -488,7 +504,6 @@ class Workspace:
         related_model_provider UX."""
         from cubes_spark.sources.slicer import SlicerHTTPStore
 
-        self._drop_stars()
         if isinstance(store, dict) and "type" not in store:
             self._tables.update(store)
             return
@@ -501,29 +516,34 @@ class Workspace:
         else:
             raise ArgumentError(f"Unknown store: {store!r}")
 
+    @_catalog_change
     def add_table(self, name: str, df: DataFrame) -> None:
-        self._drop_stars()
         self._tables[name] = df
 
+    @_catalog_change
     def add_table_expression(self, name: str, sql: str) -> None:
-        """NAMED TABLE EXPRESSION as a SQL string over store tables
-        (and previously registered tables/expressions).  Declarative —
-        models carry them in a ``table_expressions`` section, so
-        config-loaded workspaces (server, CLI) resolve them too.
-        Evaluated lazily through Catalyst: filters/projections inside
-        the expression push into the parquet scan like any view."""
-        self._drop_stars()
-        self._table_expressions[name] = sql
+        """NAMED TABLE EXPRESSION as a SQL string over the tables this
+        workspace resolves (registered DataFrames, other expressions,
+        the default store).  Declarative — models carry them in a
+        ``table_expressions`` section, so config-loaded workspaces
+        (server, CLI) resolve them too.  Evaluated lazily through
+        Catalyst: filters/projections inside the expression push into
+        the parquet scan like any view."""
+        self._tables[name] = sql
 
     def table(self, name: str, store: Optional[str] = None) -> DataFrame:
-        """Resolve a table: registered DataFrames and expressions
-        first, then the selected store (``store`` names a registered
-        store; default otherwise)."""
-        if name in self._tables:
-            return self._tables[name]
-        if name in self._table_expressions:
-            self._tables[name] = self._eval_table_expression(name)
-            return self._tables[name]
+        """Resolve a table: the latest registration of `name` first,
+        then the selected store (``store`` names a registered store;
+        default otherwise)."""
+        registered = self._tables.get(name)
+        if isinstance(registered, str):
+            return self._expression(name, registered)
+        if registered is not None:
+            return registered
+        return self._store_table(name, store)
+
+    def _store_table(self, name: str,
+                     store: Optional[str] = None) -> DataFrame:
         if store not in (None, "default"):
             named = self.get_store(store)
             if name in named:
@@ -534,54 +554,64 @@ class Workspace:
             return self.store.table(name)
         raise StoreError(f"Unknown table '{name}'")
 
-    def _eval_table_expression(self, name: str,
-                               _evaluating: Optional[set] = None) -> DataFrame:
-        """spark.sql over temp views of the REFERENCED base tables.
+    def _expression(self, name: str, sql: str) -> DataFrame:
+        """The table expression `name` = `sql`, evaluated once until the
+        next drop; expressions that reach each other raise.  Keyed by
+        its SQL too, so a read that took the SQL before a registration
+        replaced it caches nothing the next reads would get."""
+        key = (name, sql)
+        df = self._expressions.get(key)
+        if df is not None:
+            return df
+        with self._lock:
+            if key not in self._expressions:
+                self._expressions[key] = None      # being evaluated
+                try:
+                    self._expressions[key] = \
+                        self._eval_table_expression(name, sql)
+                except BaseException:
+                    self._expressions.pop(key, None)
+                    raise
+            df = self._expressions[key]
+        if df is None:
+            raise StoreError(f"Cyclic table expressions through '{name}'")
+        return df
 
-        Registration is limited to identifiers that textually appear
-        in the SQL (word-boundary match) — a store with hundreds of
-        tables must not pay a footer-inspect + DataFrame construction
-        per table for one expression.  Expressions may reference OTHER
-        table expressions: those are evaluated (recursively, cycle-
-        checked) and registered as views first, so declaration order
-        never matters."""
+    def _eval_table_expression(self, name: str, sql: str) -> DataFrame:
+        """spark.sql over temp views of the tables `sql` references,
+        each resolved by :meth:`table`, as a browser resolves it; its
+        own `name` means the default store's table of that name.
+
+        Only identifiers that textually appear in the SQL (word-boundary
+        match) are resolved — a store with hundreds of tables must not
+        pay a footer-inspect + DataFrame construction per table for one
+        expression.  A referenced expression is evaluated first, so
+        declaration order never matters."""
         import re as _re
 
-        sql = self._table_expressions[name]
-        _evaluating = _evaluating or set()
-        _evaluating.add(name)
-
-        def referenced(tname: str) -> bool:
-            return _re.search(rf"\b{_re.escape(tname)}\b", sql) is not None
-
-        for other, _osql in list(self._table_expressions.items()):
-            if other == name or not referenced(other):
-                continue
-            if other not in self._tables:
-                if other in _evaluating:
-                    raise StoreError(
-                        f"Cyclic table expressions: "
-                        f"'{name}' <-> '{other}'")
-                self._tables[other] = self._eval_table_expression(
-                    other, _evaluating)
-            self._tables[other].createOrReplaceTempView(other)
-        for tname in (self.store.list_tables() if self.store else []):
-            if not referenced(tname):
+        names = dict.fromkeys(self._tables)
+        names.update(dict.fromkeys(
+            self.store.list_tables() if self.store else []))
+        for other in names:
+            if _re.search(rf"\b{_re.escape(other)}\b", sql) is None:
                 continue
             try:
-                self.store.table(tname).createOrReplaceTempView(tname)
+                df = (self._store_table(other) if other == name
+                      else self.table(other))
             except Exception:
-                # e.g. parquet types Spark cannot read natively; an
-                # expression referencing such a table fails below with
-                # a clear analysis error
+                if other != name and other in self._tables:
+                    raise
+                # e.g. parquet types Spark cannot read natively (an
+                # expression reading such a table fails below with a
+                # clear analysis error), or the expression's own name
+                # with no store table of that name
                 continue
-        for tname, df in list(self._tables.items()):
-            if referenced(tname):
-                df.createOrReplaceTempView(tname)
+            df.createOrReplaceTempView(other)
         return self.spark.sql(sql)
 
     # -- model -------------------------------------------------------------
 
+    @_catalog_change
     def import_model(self, metadata: Any,
                      namespace: Optional[str] = None,
                      provider: Any = None) -> None:
@@ -599,7 +629,6 @@ class Workspace:
         instance, or a provider class — it receives ``metadata`` as
         its source and its :meth:`model_metadata` result is imported.
         Default (None): ``metadata`` is the model itself."""
-        self._drop_stars()
         if provider is not None:
             from cubes_spark import ext
             from cubes_spark.metadata.providers import ModelProvider
@@ -676,12 +705,14 @@ class Workspace:
             names.append(name)
         return names
 
+    @_catalog_change
     def add_cube(self, cube: Cube) -> None:
-        self._drop_stars()
-        self._cubes[cube.name] = cube
+        """Register `cube` in the root namespace, replacing a cube of
+        the same name."""
+        self.root.cubes[cube.name] = cube
 
     def add_dimension(self, dimension: Dimension) -> None:
-        self._dimensions[dimension.name] = dimension
+        self.root.add_dimension(dimension)
 
     def add_translation(self, locale: str, translation: Any,
                         namespace: Optional[str] = None) -> None:

@@ -293,6 +293,135 @@ def test_chained_table_expressions(spark):
         ws2.table("a")
 
 
+@pytest.mark.parametrize("case", [
+    "registered_again", "over_a_table", "add_table_replaces_a_reference",
+    "set_store_replaces_a_reference"])
+def test_table_expression_follows_the_latest_registration(spark, case):
+    """A table name means its latest registration, and every catalog
+    change forgets the evaluated expressions: the next read evaluates
+    them over the tables as they are now."""
+    from cubes_spark.demo import tpch_workspace
+    from tests.conftest import SF_DIR
+
+    ws = tpch_workspace(spark, SF_DIR)
+    if case in ("registered_again", "over_a_table"):
+        if case == "registered_again":
+            ws.add_table_expression("t", "SELECT 1 AS v")
+        else:
+            ws.add_table("t", spark.sql("SELECT 1 AS v"))
+        assert ws.table("t").collect() == [(1,)]
+        ws.add_table_expression("t", "SELECT 2 AS v")
+        assert ws.table("t").collect() == [(2,)]
+        return
+
+    def by_brand():
+        result = ws.browser("sales_outer").aggregate(
+            drilldown=["bigpart"], aggregates=["fact_count"])
+        return {c["bigpart.brand"]: c["fact_count"] for c in result.cells}
+
+    before = by_brand()
+    assert ws.table("big_parts").count() > 0 and len(before) > 1
+    no_parts = ws.table("part").limit(0)
+    if case == "add_table_replaces_a_reference":
+        ws.add_table("part", no_parts)
+    else:
+        ws.set_store({"part": no_parts})
+    assert ws.table("big_parts").count() == 0
+    # the master join keeps every fact, now all under a NULL brand
+    assert by_brand() == {None: sum(before.values())}
+
+
+@pytest.mark.parametrize("case", ["column_alias", "over_the_store_table"])
+def test_table_expression_may_name_itself(spark, case):
+    """An expression's own name in its SQL is not a reference to
+    itself: a column alias of that name, or the store's table of that
+    name, which the expression refines."""
+    from pyspark.sql import functions as F
+
+    from cubes_spark.demo import tpch_workspace
+    from tests.conftest import SF_DIR
+
+    ws = tpch_workspace(spark, SF_DIR)
+    lineitem = ws.table("lineitem")
+    if case == "column_alias":
+        ws.add_table_expression(
+            "revenue", "SELECT SUM(l_extendedprice) AS revenue FROM lineitem")
+        assert ws.table("revenue").collect() == \
+            lineitem.agg(F.sum("l_extendedprice").alias("revenue")).collect()
+        return
+    returned = lineitem.where("l_returnflag = 'R'").count()
+    ws.add_table_expression(
+        "lineitem", "SELECT * FROM lineitem WHERE l_returnflag = 'R'")
+    assert ws.table("lineitem").count() == returned
+    assert ws.browser("sales").aggregate(
+        aggregates=["fact_count"]).summary["fact_count"] == returned
+
+
+def test_table_expressions_evaluated_once_under_concurrent_reads(
+        spark, monkeypatch):
+    """Threads that read a chained expression at once evaluate each
+    expression once and share the result."""
+    import sys
+    import threading
+
+    from cubes_spark.sources.workspace import Workspace
+    from tests.conftest import SF_DIR
+
+    ws = Workspace(spark, store=SF_DIR)
+    ws.add_table_expression(
+        "flagged", "SELECT l_returnflag AS f FROM lineitem")
+    ws.add_table_expression(
+        "flag_counts", "SELECT f, COUNT(*) AS n FROM flagged GROUP BY f")
+    evaluated = []
+    evaluate = Workspace._eval_table_expression
+    monkeypatch.setattr(Workspace, "_eval_table_expression",
+                        lambda self, name, sql: (evaluated.append(sql),
+                                                 evaluate(self, name, sql))[1])
+
+    readers = 8
+    barrier = threading.Barrier(readers)
+    got = [None] * readers
+
+    def read(i):
+        barrier.wait(timeout=60)
+        got[i] = ws.table("flag_counts")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=read, args=(i,))
+                   for i in range(readers)]
+        for thread in threads:
+            thread.start()
+        for thread in threads:
+            thread.join(timeout=120)
+            assert not thread.is_alive()
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(evaluated) == 2
+    assert all(df is got[0] for df in got)
+    assert got[0].count() == 3
+
+    # a cached expression is read while a star build holds the lock
+    held, release, read = (threading.Event() for _ in range(3))
+
+    def hold():
+        with ws._lock:
+            held.set()
+            release.wait(timeout=60)
+    holder = threading.Thread(target=hold)
+    holder.start()
+    try:
+        assert held.wait(timeout=60)
+        reader = threading.Thread(
+            target=lambda: ws.table("flag_counts") is got[0] and read.set())
+        reader.start()
+        reader.join(timeout=30)
+        assert read.is_set()
+    finally:
+        release.set()
+        holder.join(timeout=60)
+
+
 def test_register_sql_views_pruned_plan(spark):
     """SQL over a cube view: values match the browser aggregation and
     the plan reads only the needed columns (the view is lazy — no

@@ -129,6 +129,50 @@ def test_compound_join_keys(spark):
     assert by_label == {"A1": 10, "A2": 20, "B1": 30}
 
 
+@pytest.mark.parametrize("spelling", [
+    "naming", "join_master", "join_detail", "mapping"])
+def test_schema_qualified_names_answer_like_bare_names(spark, spelling):
+    """A cube's store is one flat catalog: a schema part in the naming,
+    a join key or a mapping names the same table as the bare name."""
+    import copy
+
+    from cubes_spark.demo import TPCH_MODEL
+    from tests.conftest import SF_DIR
+
+    def answer(model, naming=None):
+        ws = Workspace(spark, store=SF_DIR, naming=naming)
+        ws.import_model(model)
+        result = ws.browser("sales").aggregate(
+            cell="date:1995", drilldown=["customer_geo:region", "part:brand"],
+            aggregates=["quantity_sum", "fact_count"])
+        return result.summary, result.cells
+
+    model = copy.deepcopy(TPCH_MODEL)
+    sales = next(c for c in model["cubes"] if c["name"] == "sales")
+    assert sales["joins"][0] == {"master": "lineitem.l_orderkey",
+                                 "detail": "orders.o_orderkey"}
+    naming = None
+    if spelling == "naming":
+        naming = {"schema": "main"}
+    elif spelling == "join_master":
+        sales["joins"][0]["master"] = "main.lineitem.l_orderkey"
+    elif spelling == "join_detail":
+        sales["joins"][0]["detail"] = "main.orders.o_orderkey"
+    else:
+        sales["mappings"]["part.brand"] = "main.part.p_brand"
+    assert answer(model, naming) == answer(TPCH_MODEL)
+
+
+def test_star_joins_tables_in_the_order_of_the_joins(tpch_browser):
+    """Masters come before their details and the rest keeps the order
+    of the cube's joins, whatever the process's hash seed."""
+    schema = tpch_browser.star_schema
+    tables = schema.required_tables(list(schema.mappings))
+    assert [t.alias for t in tables] == [
+        "lineitem", "orders", "customer", "cust_nation", "cust_region",
+        "supplier", "supp_nation", "supp_region", "part"]
+
+
 def test_order_by_postcalc_redirects_to_source(tpch_browser):
     # ordering by price_sma must order by its source aggregate price_sum
     by_sma = tpch_browser.aggregate(

@@ -235,6 +235,36 @@ class TestLifecycle:
         # a browser made before the change does not bring the star back
         assert not reads_star(thing_plan(before))
 
+    @pytest.mark.parametrize("hook", ["before_the_drop", "after_the_drop"])
+    def test_a_request_beside_the_drop_sees_the_change(
+            self, spark, tmp_path, monkeypatch, hook):
+        """A request that runs while a catalog change drops the stars
+        leaves nothing built over the old tables: neither the star nor
+        an evaluated table expression."""
+        ws = thing_workspace(spark, tmp_path)
+        ws.add_table_expression("named", "SELECT name FROM dim_thing")
+        drop = Workspace._drop_stars
+
+        def request():
+            thing_names(ws.browser("sales"))
+            ws.table("named").collect()
+
+        def hooked(self):
+            if hook == "before_the_drop":
+                request()
+            drop(self)
+            if hook == "after_the_drop":
+                request()
+        monkeypatch.setattr(Workspace, "_drop_stars", hooked)
+        ws.add_table("dim_thing", spark.createDataFrame(
+            [("a", "X"), ("b", "Y")], ["code", "name"]))
+        monkeypatch.undo()
+
+        assert thing_names(ws.browser("sales")) == ["X", "Y"]
+        assert reads_star(thing_plan(ws.browser("sales")))
+        assert sorted(r.name for r in ws.table("named").collect()) == \
+            ["X", "Y"]
+
     def test_no_cache_entry_left_after_the_workspace_is_dropped(
             self, spark, tmp_path):
         ws = thing_workspace(spark, tmp_path)

@@ -62,6 +62,22 @@ def test_cube_model(client):
     assert any(d["name"] == "date" for d in data["dimensions"])
 
 
+def test_cube_model_builds_no_browser(secured_client, monkeypatch):
+    from cubes_spark.sources.workspace import Workspace
+
+    builds = []
+    browser = Workspace.browser
+    monkeypatch.setattr(Workspace, "browser", lambda self, *args, **kw: (
+        builds.append(args), browser(self, *args, **kw))[1])
+    status, data = get_json(secured_client,
+                            "/cube/sales/model?identity=analyst")
+    assert status == 200 and data["name"] == "sales"
+    assert secured_client.get("/cube/sales/model").status_code == 403
+    assert secured_client.get(
+        "/cube/nope/model?identity=analyst").status_code == 404
+    assert builds == []
+
+
 def test_unknown_cube_404(client):
     status, data = get_json(client, "/cube/nope/model")
     assert status == 404
