@@ -10,7 +10,14 @@ full-grain cuboid (``create_cube_aggregate``, cubes/sql/store.py:
   cell and aggregates a cuboid covers is rewritten by
   :meth:`Cuboid.plan` to scan the smallest such cuboid, not the star;
 * **refresh** — :meth:`Cuboid.refresh` merges the aggregate of a
-  delta slice of new facts (``olap.refresh_aggregate`` is its entry).
+  delta slice of new facts (``olap.refresh_aggregate`` is its entry);
+* **read** — every read of a cuboid table (:meth:`Cuboid.load`, a
+  companion table, the refresh's merge input, the row count) takes the
+  DataFrame this module built over the files it last wrote at that
+  path in that Spark session, with the schema it wrote: no file
+  listing and no schema-inference job.  A path this process has not
+  written, another session, or a write that raised, lists the files
+  and infers the schema again (:func:`_read`).
 
 Format: one parquet with a column per grain attribute ref (dots stored
 as ``__``, :func:`safe_columns`), per stored aggregate and per hidden
@@ -99,6 +106,33 @@ def safe_columns(df: Any) -> Any:
 def _col(name: str):
     """Column by name, backtick-safe for dotted logical refs."""
     return F.col(f"`{name}`")
+
+
+#: path → DataFrame over the files this module last wrote there, read
+#: with the schema it wrote (building it lists the files, runs no job)
+_written: dict = {}
+
+
+def _write(df: Any, path: str, mode: str = "overwrite") -> None:
+    """Write ``df`` as the parquet at ``path`` and hold a DataFrame over
+    the written files for :func:`_read`.  A write that raises holds
+    nothing, and neither does an ``ignore`` write, which may have kept
+    older files."""
+    _written.pop(path, None)
+    df.write.mode(mode).parquet(path)
+    if mode != "ignore":
+        _written[path] = df.sparkSession.read.schema(df.schema) \
+            .parquet(path)
+
+
+def _read(spark: Any, path: str) -> Any:
+    """The parquet at ``path``: the DataFrame :func:`_write` holds when
+    ``spark`` wrote it, else a fresh read (a listing and a
+    schema-inference job)."""
+    df = _written.get(path)
+    if df is not None and df.sparkSession is spark:
+        return df
+    return spark.read.parquet(path)
 
 
 class _Ref:
@@ -281,7 +315,7 @@ class Cuboid:
             safe = safe.drop(*[_safe(n) for n in drop])
             dtypes = {c: t for c, t in safe.dtypes}
 
-        safe.write.mode(mode).parquet(path)
+        _write(safe, path, mode)
         refs = [a.ref for a in dd.all_attributes]
         spark = df.sparkSession
 
@@ -301,11 +335,11 @@ class Cuboid:
             proj = context.filtered_star(cell).select(
                 *[context.column(r).alias(_safe(r)) for r in refs],
                 context.column(a.measure).alias("__key__"))
-            proj.distinct().write.mode(mode).parquet(sub)
+            _write(proj.distinct(), sub, mode)
             distinct_tables[a.name] = sub
 
         # metadata-only count over the written files (row-group stats)
-        rows = spark.read.parquet(path).count()
+        rows = _read(spark, path).count()
         recorded = [a.name for a in prepared] + sorted(
             n for n in owned - drop)
         return cls(path, refs, prepared,
@@ -353,7 +387,7 @@ class Cuboid:
         delta = browser._fact_only()._aggregation_plan(
             browser.prepare_cell(delta_cell),
             list(self.aggregates.values()), grain, None)
-        existing = delta.sparkSession.read.parquet(self.path)
+        existing = _read(delta.sparkSession, self.path)
         keys = [c for c in existing.columns if c not in merge_fns]
         merged = (
             existing.unionByName(
@@ -364,7 +398,7 @@ class Cuboid:
             .select(*existing.columns)
             .localCheckpoint(eager=True)
         )
-        merged.write.mode("overwrite").parquet(self.path)
+        _write(merged, self.path)
 
     def plan(self, browser: Any, cell: Any, aggregates: Sequence[Any],
              drilldown: Any) -> Optional[Any]:
@@ -439,7 +473,7 @@ class Cuboid:
                 else projected.agg(F.lit(1).alias("__base__"))
         for name, sub in companions.items():
             d_ctx, d_df = self._filtered(
-                browser, raw.sparkSession.read.parquet(sub), cell)
+                browser, _read(raw.sparkSession, sub), cell)
             d_proj = d_df.select(
                 *[d_ctx.column(ref).alias(ref) for ref in dd_refs],
                 _col("__key__"))
@@ -530,7 +564,7 @@ class Cuboid:
 
     def load(self, spark: Any):
         """The cuboid table with SAFE column names (no dots)."""
-        return spark.read.parquet(self.path)
+        return _read(spark, self.path)
 
 
 class StreamAggregateCuboid(Cuboid):
@@ -671,7 +705,7 @@ class HLLCuboid:
         regs = hll_registers(projected, "__m__",
                              group_cols=[_safe(r) for r in refs],
                              m=m, rank_bits=rank_bits, salt=salt)
-        regs.write.mode(mode).parquet(path)
+        _write(regs, path, mode)
         return cls(path, refs, measure, m=m, rank_bits=rank_bits,
                    salt=salt)
 
@@ -689,7 +723,7 @@ class HLLCuboid:
                 f"HLL cuboid at grain {self.attribute_refs} cannot "
                 f"serve {list(keep_refs)}")
         keep = [_safe(r) for r in keep_refs]
-        df = spark.read.parquet(self.path)
+        df = _read(spark, self.path)
         return (df.groupBy(*keep, "bucket")
                 .agg(F.max("register").cast("int").alias("register")))
 

@@ -261,6 +261,9 @@ class ParquetStore:
 
 #: numbers the persisted stars of this process (``STAR_MARKER`` values)
 _STAR_BUILDS = itertools.count(1)
+#: held while table expressions swap their tables in as temp views, so
+#: workspaces sharing a session do not see each other's
+_TEMP_VIEWS = threading.Lock()
 
 
 def _unpersist_stars(stars: Dict[tuple, Optional[DataFrame]]) -> None:
@@ -580,7 +583,9 @@ class Workspace:
     def _eval_table_expression(self, name: str, sql: str) -> DataFrame:
         """spark.sql over temp views of the tables `sql` references,
         each resolved by :meth:`table`, as a browser resolves it; its
-        own `name` means the default store's table of that name.
+        own `name` means the default store's table of that name.  The
+        session's own temp views of those names are put back after the
+        SQL is analyzed.
 
         Only identifiers that textually appear in the SQL (word-boundary
         match) are resolved — a store with hundreds of tables must not
@@ -592,6 +597,7 @@ class Workspace:
         names = dict.fromkeys(self._tables)
         names.update(dict.fromkeys(
             self.store.list_tables() if self.store else []))
+        tables = {}
         for other in names:
             if _re.search(rf"\b{_re.escape(other)}\b", sql) is None:
                 continue
@@ -606,8 +612,23 @@ class Workspace:
                 # clear analysis error), or the expression's own name
                 # with no store table of that name
                 continue
-            df.createOrReplaceTempView(other)
-        return self.spark.sql(sql)
+            tables[other] = df
+        catalog = self.spark.catalog
+        with _TEMP_VIEWS:
+            saved = {other: self.spark.table(other) for other in tables
+                     if catalog.tableExists(other)
+                     and catalog.getTable(other).isTemporary}
+            try:
+                for other, df in tables.items():
+                    df.createOrReplaceTempView(other)
+                # analyzed here: the DataFrame no longer reads the views
+                return self.spark.sql(sql)
+            finally:
+                for other in tables:
+                    if other in saved:
+                        saved[other].createOrReplaceTempView(other)
+                    else:
+                        catalog.dropTempView(other)
 
     # -- model -------------------------------------------------------------
 

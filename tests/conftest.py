@@ -31,6 +31,28 @@ def spark():
     yield session
 
 
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` → ``(jobs, fn())``: the number of Spark jobs
+    ``fn`` started, counted through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"spark_jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # job starts reach the status tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), result
+    return count
+
+
 #: The reference's 16-row golden aggregation fixture
 #: (/root/reference/tests/sql/test_aggregates.py:19-45, FIXTURES.md §2).
 GOLDEN_FACTS = [

@@ -331,6 +331,33 @@ def test_table_expression_follows_the_latest_registration(spark, case):
     assert by_brand() == {None: sum(before.values())}
 
 
+def test_table_expressions_leave_the_sessions_temp_views_alone(spark):
+    """Evaluating an expression puts the session's own temp views of
+    the names it reads back, and leaves none of its own behind; the
+    expressions answer as over a session without such views."""
+    from cubes_spark.demo import tpch_workspace
+    from tests.conftest import SF_DIR
+
+    def answers():
+        ws = tpch_workspace(spark, SF_DIR)
+        result = ws.browser("sales_outer").aggregate(
+            drilldown=["bigpart"], aggregates=["fact_count"])
+        return (ws.table("big_parts").count(),
+                {c["bigpart.brand"]: c["fact_count"] for c in result.cells})
+
+    spark.range(5).withColumnRenamed("id", "p_partkey") \
+        .createOrReplaceTempView("part")
+    try:
+        got = answers()
+        assert spark.table("part").count() == 5
+    finally:
+        spark.catalog.dropTempView("part")
+    assert answers() == got
+    assert not spark.catalog.tableExists("part")
+    parts = tpch_workspace(spark, SF_DIR).table("part")
+    assert got[0] == parts.where("p_size > 25").count() > 0
+
+
 @pytest.mark.parametrize("case", ["column_alias", "over_the_store_table"])
 def test_table_expression_may_name_itself(spark, case):
     """An expression's own name in its SQL is not a reference to

@@ -247,6 +247,45 @@ def test_refresh_through_browser_with_cuboid_registered(spark, tmp_path):
         == {(1995, m) for m in range(1, 13)} | {(1996, 1)}
 
 
+def test_refresh_then_read_through_another_descriptor(spark, tmp_path,
+                                                      spark_jobs):
+    """Refreshes through one browser, reads through a hand-built
+    descriptor registered on another: each read returns the month the
+    last refresh merged, answers like the fact star, and is planned
+    over the files the refresh wrote with no Spark job."""
+    from cubes_spark.demo import tpch_workspace
+    from cubes_spark.operators.preagg import Cuboid
+    from cubes_spark.query.drilldown import Drilldown
+    from tests.conftest import SF_DIR
+
+    grain = ["date@ym:month", "customer_geo:region", "returnflag"]
+    aggregates = ["price_sum", "quantity_sum", "fact_count"]
+    ws = tpch_workspace(spark, SF_DIR)
+    free, serving = ws.browser("sales"), ws.browser("sales")
+    path = str(tmp_path / "cuboid")
+    olap.materialize_aggregate(free, path, grain, aggregates,
+                               cell="date:-1995")
+    refs = [a.ref for a in Drilldown(grain, serving.prepare_cell(None))
+            .all_attributes]
+    serving.add_cuboid(Cuboid(path, refs,
+                              serving.prepare_aggregates(aggregates)))
+
+    for month in (1, 2):
+        olap.refresh_aggregate(free, path, grain, aggregates,
+                               delta_cell=f"date:1996,{month}")
+        for cell in (f"date:1996,{month}", f"date:1995,6-1996,{month}"):
+            request = dict(cell=cell, drilldown=grain[1:],
+                           aggregates=aggregates)
+            jobs, df = spark_jobs(
+                lambda: serving.aggregation_dataframe(**request))
+            assert jobs == 0, cell
+            assert not any("lineitem" in f for f in df.inputFiles())
+            got = serving.aggregate(**request)
+            want = serving._fact_only().aggregate(**request)
+            assert got.cells and got.cells == want.cells, cell
+            assert got.summary == want.summary, cell
+
+
 def test_refresh_aggregate_rejects_nondistributive(tpch_browser,
                                                    tmp_path):
     import pytest as _pytest

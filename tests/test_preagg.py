@@ -768,6 +768,20 @@ class TestHLLCuboid:
         want = hll_estimate(all_regs, []).collect()[0]["hll_est"]
         assert total == want
 
+    def test_rollup_plans_no_job(self, spark, tmp_path, spark_jobs):
+        """A rollup reads the register table its materialize just
+        wrote: planning it lists no files and infers no schema."""
+        from cubes_spark.operators.preagg import HLLCuboid
+
+        b = tpch_workspace(spark, SF_DIR).browser("sales")
+        cub = HLLCuboid.materialize(
+            b, str(tmp_path / "hll"), ["date@ym:month"], "partkey")
+        jobs, df = spark_jobs(lambda: cub.rollup(spark, ["date.year"]))
+        assert jobs == 0
+        fresh = HLLCuboid(cub.path, cub.attribute_refs, cub.measure)
+        assert sorted(df.collect()) == sorted(
+            fresh.rollup(spark.newSession(), ["date.year"]).collect())
+
     def test_uncovered_grain_raises(self, spark, tmp_path):
         from cubes_spark.errors import ArgumentError
         from cubes_spark.operators.preagg import HLLCuboid
@@ -811,6 +825,15 @@ class TestDistinctFromCompanion:
         )
         assert sorted(map(str, df.collect())) \
             == sorted(map(str, expect.collect()))
+
+    def test_coarser_grain_plans_no_job(self, cd_browser, spark_jobs):
+        """The companion table is read through the DataFrame its writer
+        built: planning the rewrite starts no Spark job."""
+        jobs, df = spark_jobs(lambda: cd_browser.aggregation_dataframe(
+            drilldown=["date:year"],
+            aggregates=["part_count_distinct", "fact_count"]))
+        assert jobs == 0
+        assert "lineitem" not in plan_of(df)
 
     def test_cell_cut_applies_to_companion(self, cd_browser, spark):
         df = cd_browser.aggregation_dataframe(
@@ -923,3 +946,71 @@ class TestRefresh:
         # 1996 came in through the refresh, nothing after it
         years = {r["date__year"] for r in spark.read.parquet(path).collect()}
         assert max(years) == 1996
+
+    @pytest.mark.parametrize("refreshed", [False, True])
+    def test_a_read_plans_no_job(self, spark, tmp_path, spark_jobs,
+                                 refreshed):
+        """A read plans over the table its writer just wrote, after a
+        materialize and after a refresh: no file listing and no
+        schema-inference job."""
+        from cubes_spark.operators.preagg import Cuboid
+
+        b = tpch_workspace(spark, SF_DIR).browser("sales")
+        path = str(tmp_path / "ym_cuboid")
+        cuboid = Cuboid.materialize(
+            b, path, ["date@ym:month", "returnflag"], self.AGGREGATES,
+            cell="date:-1995")
+        b.add_cuboid(cuboid)
+        cell = "date:1995"
+        if refreshed:
+            cuboid.refresh(b, "date:1996")
+            cell = "date:1995-1996"
+
+        request = dict(cell=cell, drilldown=["date:year", "returnflag"],
+                       aggregates=self.AGGREGATES)
+        jobs, df = spark_jobs(lambda: b.aggregation_dataframe(**request))
+        assert jobs == 0
+        directory = os.path.realpath(path)
+        assert all(os.path.commonpath([directory, f]) == directory
+                   for f in self._files(df))
+        got = b.aggregate(**request)
+        want = b._fact_only().aggregate(**request)
+        assert got.cells == want.cells
+        assert got.summary == want.summary
+
+    def test_a_write_that_raises_holds_nothing(self, spark, tmp_path,
+                                               monkeypatch):
+        """A refresh whose write raises after it replaced the files
+        leaves no table held for the path: the next read lists the
+        files again and answers the merged range."""
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        from cubes_spark.operators import preagg
+        from cubes_spark.operators.preagg import Cuboid
+
+        b = tpch_workspace(spark, SF_DIR).browser("sales")
+        path = str(tmp_path / "ym_cuboid")
+        cuboid = Cuboid.materialize(
+            b, path, ["date@ym:month", "returnflag"], self.AGGREGATES,
+            cell="date:-1995")
+        b.add_cuboid(cuboid)
+        held = preagg._written[path]
+
+        write = DataFrameWriter.parquet
+
+        def fails_after(self, *args, **kwargs):
+            write(self, *args, **kwargs)
+            raise OSError("disk gone")
+        monkeypatch.setattr(DataFrameWriter, "parquet", fails_after)
+        with pytest.raises(OSError, match="disk gone"):
+            cuboid.refresh(b, "date:1996")
+        monkeypatch.undo()
+
+        assert path not in preagg._written
+        assert cuboid.load(spark) is not held
+        request = dict(cell="date:1995-1996", drilldown=["date:year"],
+                       aggregates=self.AGGREGATES)
+        got = b.aggregate(**request)
+        want = b._fact_only().aggregate(**request)
+        assert got.cells == want.cells
+        assert got.summary == want.summary
