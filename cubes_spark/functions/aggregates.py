@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 __all__ = [
     "AggregateFunction",
     "available_aggregate_functions",
+    "exact_from_sums",
     "get_aggregate_function",
     "register_aggregate_function",
 ]
@@ -119,13 +120,20 @@ def register_aggregate_function(
 _DECIMAL_RE = re.compile(r"decimal\((\d+),\s*(\d+)\)")
 
 
-def _decimal_scale(dtype: Optional[str]):
+def exact_from_sums(function: str, dtype: Optional[str]) -> bool:
+    """Whether ``function`` (avg, variance or stddev) of a measure of
+    Spark dtype ``dtype`` is computed from exact decimal sums: avg of
+    any decimal; variance and stddev of a decimal with scale <= 6 (a
+    larger scale is adjusted by Spark's precision capping when
+    squared).  Anything else is the native floating-point aggregate."""
     m = _DECIMAL_RE.match(dtype or "")
-    return (int(m.group(1)), int(m.group(2))) if m else None
+    if not m:
+        return False
+    return function == "avg" or int(m.group(2)) <= 6
 
 
 def _exact_avg(column: Column, dtype: Optional[str] = None) -> Column:
-    if not _decimal_scale(dtype):
+    if not exact_from_sums("avg", dtype):
         return F.avg(column)
     return F.sum(column).cast("double") / F.count(column).cast("double")
 
@@ -135,7 +143,7 @@ def variance_from_sums(n_raw: Column, s1: Column, s2: Column) -> Column:
     count), ``s1`` = sum(m) cast to double, ``s2`` = sum(m*m) cast to
     double.  Shared by the direct decimal-exact path (:func:`_exact_var`)
     and the cuboid partial-aggregate rewrite
-    (operators/preagg.py ``Cuboid.partials_for``) so a variance served
+    (operators/preagg.py ``Cuboid.plan``) so a variance served
     from merged (sum, sum², count) partials is bit-identical to the
     direct computation — the component sums are decimal-exact, hence
     independent of partitioning and merge order."""
@@ -144,11 +152,9 @@ def variance_from_sums(n_raw: Column, s1: Column, s2: Column) -> Column:
 
 
 def _exact_var(column: Column, dtype: Optional[str] = None):
-    """Sample variance from exact decimal sums; returns None when the
-    measure is not a decimal (or has a scale Spark's precision-capping
-    would adjust, >6)."""
-    ps = _decimal_scale(dtype)
-    if not ps or ps[1] > 6:
+    """Sample variance from exact decimal sums; returns None when
+    :func:`exact_from_sums` says the native aggregate applies."""
+    if not exact_from_sums("variance", dtype):
         return None
     # square at native precision: (p,s)^2 caps at (38,2s) identically in
     # Spark and ANSI SQL engines — exact for values < 10^(19-s)

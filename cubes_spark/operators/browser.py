@@ -27,13 +27,13 @@ from __future__ import annotations
 
 import copy
 from typing import (
-    Any, Callable, Dict, Iterable, List, Optional, Sequence, Union,
+    Any, Callable, Dict, Iterable, List, Optional, Sequence,
 )
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cubes_spark.errors import ArgumentError, BrowserError
+from cubes_spark.errors import ArgumentError
 from cubes_spark.functions.aggregates import (
     available_aggregate_functions,
     get_aggregate_function,
@@ -53,6 +53,7 @@ from cubes_spark.plans.mapper import (
     StarSchemaMapper,
     distill_naming,
     map_base_attributes,
+    ref_col,
 )
 from cubes_spark.plans.star import QueryContext, StarSchema
 from cubes_spark.query.cells import Cell, PointCut, cuts_from_string
@@ -62,14 +63,9 @@ from cubes_spark.query.result import AggregationResult
 __all__ = ["SparkBrowser"]
 
 
-def _qcol(name: str) -> Column:
-    """Column by name, backtick-safe for dotted logical refs."""
-    return F.col(f"`{name}`")
-
-
 def _sort_column(ref: str, direction: Optional[str]) -> Column:
     """``ref`` ascending, or descending when ``direction`` says so."""
-    col = _qcol(ref)
+    col = ref_col(ref)
     if direction and direction.lower().startswith("desc"):
         return col.desc()
     return col.asc()
@@ -101,9 +97,9 @@ _SUMMARY_ROW = "__summary_row__"
 
 
 class SparkBrowser:
-    """Aggregation browser for one cube over its tables: a
-    ``{name: DataFrame}`` dict or a lookup that returns a table's
-    DataFrame by name (``Workspace.browser`` passes ``Workspace.table``).
+    """Aggregation browser for one cube over its tables: ``tables``
+    returns a table's DataFrame by name (``Workspace.browser`` passes
+    ``Workspace.table``).
 
     Options (cube.browser_options or constructor kwargs; parity:
     sql/browser.py:102-190):
@@ -123,7 +119,7 @@ class SparkBrowser:
     def __init__(
         self,
         cube: Cube,
-        tables: Union[Dict[str, DataFrame], Callable[[str], DataFrame]],
+        tables: Callable[[str], DataFrame],
         locale: Optional[str] = None,
         naming: Optional[Naming] = None,
         persisted: Optional[Callable[[StarSchema], Optional[DataFrame]]]
@@ -166,22 +162,13 @@ class SparkBrowser:
             cube, mapper_cls, naming, locale
         )
 
-        table = tables if callable(tables) else tables.__getitem__
-        try:
-            fact_df = table(self.fact_name)
-        except KeyError:
-            raise BrowserError(
-                f"No fact table '{self.fact_name}' in provided tables "
-                f"for cube '{cube.name}'"
-            )
-
         self.star_schema = StarSchema(
             cube.name,
             self.fact_name,
-            fact_df,
+            tables(self.fact_name),
             mappings=self.mappings,
             joins=cube.joins,
-            table=table,
+            table=tables,
             persisted=persisted,
         )
         self.hierarchies = cube.distilled_hierarchies()
@@ -196,16 +183,14 @@ class SparkBrowser:
         self._cuboids.append(cuboid)
 
     def materialize_cuboid(self, path: str, drilldown: Any,
-                           aggregates: Optional[Iterable] = None,
-                           mode: str = "overwrite") -> Any:
+                           aggregates: Optional[Iterable] = None) -> Any:
         """Materialize + register a cuboid
         (supersedes reference create_cube_aggregate,
         sql/store.py:549-628)."""
         from cubes_spark.operators.preagg import Cuboid
 
         cuboid = Cuboid.materialize(self, path, drilldown,
-                                    list(aggregates) if aggregates else None,
-                                    mode=mode)
+                                    list(aggregates) if aggregates else None)
         self.add_cuboid(cuboid)
         return cuboid
 
@@ -539,7 +524,7 @@ class SparkBrowser:
                                            dict(projected.dtypes))
 
         if group_refs:
-            grouped = projected.groupBy(*[_qcol(r) for r in group_refs])
+            grouped = projected.groupBy(*[ref_col(r) for r in group_refs])
             return grouped.agg(*agg_cols) if agg_cols \
                 else grouped.count().drop("count")
         return projected.agg(*agg_cols)
@@ -555,7 +540,7 @@ class SparkBrowser:
         columns: List[Column] = []
         coalesce = bool(self.options.get("coalesce_measures"))
         agg_context: Dict[str, Column] = {
-            ref: _qcol(ref) for ref in projected_refs
+            ref: ref_col(ref) for ref in projected_refs
         }
         for agg in aggregates:
             if agg.function in CALCULATED_AGGREGATIONS:
@@ -582,12 +567,12 @@ class SparkBrowser:
                     context = None
                     if function.dtype_aware and dtypes:
                         context = {"dtype": dtypes.get(agg.measure)}
-                    column = function.apply(_qcol(agg.measure),
+                    column = function.apply(ref_col(agg.measure),
                                             context=context,
                                             coalesce=coalesce)
             else:
                 # direct (pre-aggregated) measure column
-                column = F.sum(_qcol(agg.name))
+                column = F.sum(ref_col(agg.name))
             columns.append(column.alias(agg.name))
         return columns
 
@@ -600,9 +585,9 @@ class SparkBrowser:
         result to one task."""
         cols: List[Column] = []
         if has_split:
-            cols.append(_qcol(SPLIT_DIMENSION_NAME))
+            cols.append(ref_col(SPLIT_DIMENSION_NAME))
         for item in list(drilldown)[:-1]:
-            cols += [_qcol(level.key.ref) for level in item.levels]
+            cols += [ref_col(level.key.ref) for level in item.levels]
         return cols or None
 
     def _order_columns(self, available_columns: Sequence[str],
@@ -620,7 +605,7 @@ class SparkBrowser:
             cols.append(_sort_column(ref, direction))
             used.add(ref)
         if has_split and SPLIT_DIMENSION_NAME not in used:
-            cols.append(_qcol(SPLIT_DIMENSION_NAME).desc())
+            cols.append(ref_col(SPLIT_DIMENSION_NAME).desc())
         for attribute, direction in drilldown.natural_order:
             if attribute.ref in used or attribute.ref not in available:
                 continue
@@ -808,7 +793,7 @@ class SparkBrowser:
         if fact_list is not None:
             # key filter on the statement, before any projection that may
             # drop the key (parity: sql/browser.py:251-253)
-            df = df.filter(_qcol(self.cube.key).isin(fact_list))
+            df = df.filter(ref_col(self.cube.key).isin(fact_list))
             if fields and self.cube.key not in [str(f) for f in fields]:
                 df = df.drop(self.cube.key)
         cols = self._explicit_order(df, order)
@@ -838,7 +823,8 @@ class SparkBrowser:
             raise ArgumentError(f"Cube '{self.cube.name}' has no fact key")
         df = self.denormalized_dataframe(cell, fields,
                                          include_fact_key=True)
-        rows = df.filter(_qcol(self.cube.key) == key_value).limit(1).collect()
+        rows = df.filter(ref_col(self.cube.key) == key_value) \
+            .limit(1).collect()
         return rows[0].asDict() if rows else None
 
     def members_dataframe(
@@ -889,7 +875,7 @@ class SparkBrowser:
             cell, dimension, depth, level, hierarchy, attributes
         )
         cols = self._explicit_order(df, order) \
-            or [_qcol(c).asc() for c in df.columns]
+            or [ref_col(c).asc() for c in df.columns]
         df = df.orderBy(*cols)
         df = self._paginate_df(df, page, page_size)
         return [row.asDict() for row in df.collect()]

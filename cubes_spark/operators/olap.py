@@ -26,7 +26,8 @@ from pyspark.sql import Column, DataFrame
 
 from pyspark.sql import functions as F
 
-from cubes_spark.operators.preagg import Cuboid, _safe, safe_columns
+from cubes_spark.operators.preagg import Cuboid, safe_columns
+from cubes_spark.plans.mapper import safe_name
 from cubes_spark.query.drilldown import Drilldown
 
 __all__ = [
@@ -424,23 +425,22 @@ def materialize_denormalized(browser: Any, path: str,
     safe = spread(safe)
     writer = safe.write.mode(mode)
     if partition_by:
-        writer = writer.partitionBy(*[_safe(p) for p in partition_by])
+        writer = writer.partitionBy(*[safe_name(p) for p in partition_by])
     writer.parquet(path)
 
 
 def materialize_aggregate(browser: Any, path: str,
                           drilldown: Sequence[str],
                           aggregates: Optional[Sequence[str]] = None,
-                          mode: str = "overwrite",
                           cell: Any = None) -> Cuboid:
     """Materialize the aggregated cuboid at full drilldown grain and
     return its descriptor (parity entry point of create_cube_aggregate,
     sql/store.py:549-628; the writer is
     :meth:`~cubes_spark.operators.preagg.Cuboid.materialize`).
     ``cell`` restricts the materialized slice — the building block for
-    incremental maintenance (see :func:`refresh_aggregate`)."""
-    return Cuboid.materialize(browser, path, drilldown, aggregates,
-                              mode=mode, cell=cell)
+    incremental maintenance (see :func:`refresh_aggregate`); the
+    descriptor then serves only requests inside that slice."""
+    return Cuboid.materialize(browser, path, drilldown, aggregates, cell=cell)
 
 
 def refresh_aggregate(browser: Any, path: str,

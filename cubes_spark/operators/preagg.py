@@ -5,10 +5,15 @@ full-grain cuboid (``create_cube_aggregate``, cubes/sql/store.py:
 
 * **materialize** — :meth:`Cuboid.materialize` writes the aggregate at
   a drilldown's grain (optionally a cell's slice of it) and returns
-  the descriptor (``olap.materialize_aggregate`` is its parity entry);
+  the descriptor (``olap.materialize_aggregate`` is its parity entry).
+  Every write of this module overwrites what was at its path, so a
+  descriptor always describes exactly the files it names;
 * **register** — ``browser.add_cuboid``: an aggregation whose grain,
   cell and aggregates a cuboid covers is rewritten by
-  :meth:`Cuboid.plan` to scan the smallest such cuboid, not the star;
+  :meth:`Cuboid.plan` to scan the smallest such cuboid, not the star.
+  A cuboid materialized over a cell's slice records the cell's cuts
+  and serves only requests whose cell lies inside each of them (the
+  same cut, or a point or range within a range);
 * **refresh** — :meth:`Cuboid.refresh` merges the aggregate of a
   delta slice of new facts (``olap.refresh_aggregate`` is its entry);
 * **read** — every read of a cuboid table (:meth:`Cuboid.load`, a
@@ -35,26 +40,27 @@ falls back to the fact star):
 * if the requested grain is COARSER, distributive aggregates
   re-aggregate: sum→sum, count→sum, count_nonempty→sum, min→min,
   max→max;
-* ALGEBRAIC ``avg`` re-aggregates from stored partials when the cuboid
-  also stores a ``sum`` and a ``count_nonempty`` of the SAME measure
-  and the stored sum is decimal (exact partials):
+* ALGEBRAIC ``avg``/``variance``/``stddev`` re-aggregate exactly only
+  where the direct path computes them from exact decimal sums — the
+  one rule :func:`~cubes_spark.functions.aggregates.exact_from_sums`
+  (avg of a decimal; variance/stddev of a decimal with scale ≤ 6).
+  Elsewhere the direct computation is itself order-dependent floating
+  point, no partial set can reproduce it, and the request falls back
+  to the fact star.
+* ``avg`` re-aggregates from stored partials when the cuboid also
+  stores a ``sum`` and a ``count_nonempty`` of the SAME measure:
   ``sum(sums)/sum(counts)`` is then bit-identical to the engine's
   decimal-exact direct avg (functions/aggregates.py ``_exact_avg``).
-* ALGEBRAIC ``variance``/``stddev`` (and ``avg``) re-aggregate from
-  partials RECORDED AT MATERIALIZATION: when the materialized aggregate
-  list contains an avg/variance/stddev of a decimal measure,
-  :meth:`Cuboid.materialize` additionally stores hidden
+* ``variance``/``stddev`` (and ``avg``) re-aggregate from partials
+  RECORDED AT MATERIALIZATION: for each such aggregate the rule
+  passes, :meth:`Cuboid.materialize` additionally stores hidden
   (sum, count[, sum-of-squares]) partial columns in the same single
   aggregation pass and records them on the descriptor.  Variance is
   then served at ANY coarser grain as
   ``(Σs2 − (Σs1)²/Σn)/(Σn − 1)`` — the same formula over the same
   exact decimal sums as the direct path
   (functions/aggregates.py ``variance_from_sums``), hence
-  bit-identical.  Gate: the measure must be decimal with scale ≤ 6
-  (the ``_exact_var`` condition); otherwise the direct computation is
-  itself order-dependent floating point and no partial set can
-  reproduce it — those fall back to the fact star, as does
-  double-measure avg.
+  bit-identical.
 * EXACT ``count_distinct`` at coarser grains is served from a
   COMPANION DISTINCT-KEY TABLE written at materialization (the
   distinct ``(grain..., key)`` set — the only state from which a
@@ -75,6 +81,9 @@ from typing import Any, List, Optional, Sequence
 
 from pyspark.sql import functions as F
 
+from cubes_spark.functions.aggregates import exact_from_sums
+from cubes_spark.plans.mapper import ref_col, safe_name
+
 __all__ = ["Cuboid", "StreamAggregateCuboid", "HLLCuboid",
            "REAGGREGABLE", "safe_columns",
            "cuboid_sizes",
@@ -90,22 +99,11 @@ REAGGREGABLE = {
     "max": F.max,
 }
 
-SAFE_SEP = "__"
-
-
-def _safe(ref: str) -> str:
-    return ref.replace(".", SAFE_SEP)
-
 
 def safe_columns(df: Any) -> Any:
-    """``df`` with every column renamed to its safe name: logical refs
-    contain dots, parquet field names cannot."""
-    return df.select(*[F.col(f"`{c}`").alias(_safe(c)) for c in df.columns])
-
-
-def _col(name: str):
-    """Column by name, backtick-safe for dotted logical refs."""
-    return F.col(f"`{name}`")
+    """``df`` with every column renamed to its safe name
+    (:func:`~cubes_spark.plans.mapper.safe_name`)."""
+    return df.select(*[ref_col(c).alias(safe_name(c)) for c in df.columns])
 
 
 #: path → DataFrame over the files this module last wrote there, read
@@ -113,16 +111,13 @@ def _col(name: str):
 _written: dict = {}
 
 
-def _write(df: Any, path: str, mode: str = "overwrite") -> None:
-    """Write ``df`` as the parquet at ``path`` and hold a DataFrame over
-    the written files for :func:`_read`.  A write that raises holds
-    nothing, and neither does an ``ignore`` write, which may have kept
-    older files."""
+def _write(df: Any, path: str) -> None:
+    """Write ``df`` as the parquet at ``path``, replacing what was there,
+    and hold a DataFrame over the written files for :func:`_read`.  A
+    write that raises holds nothing."""
     _written.pop(path, None)
-    df.write.mode(mode).parquet(path)
-    if mode != "ignore":
-        _written[path] = df.sparkSession.read.schema(df.schema) \
-            .parquet(path)
+    df.write.mode("overwrite").parquet(path)
+    _written[path] = df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def _read(spark: Any, path: str) -> Any:
@@ -133,6 +128,74 @@ def _read(spark: Any, path: str) -> Any:
     if df is not None and df.sparkSession is spark:
         return df
     return spark.read.parquet(path)
+
+
+def _within(path: Optional[list], bound: Optional[list], end: int) -> bool:
+    """Whether every member under ``path`` is inside ``bound``, the lower
+    (``end`` -1) or upper (``end`` 1) path of a range; None is open."""
+    if bound is None:
+        return True
+    if path is None:
+        return False
+    for x, y in zip(map(str, path), map(str, bound)):
+        if x != y:
+            # digit strings of one width are the only members that
+            # order alike in a numeric and in a string level column
+            return len(x) == len(y) and x.isdigit() and y.isdigit() \
+                and (x < y) == (end == 1)
+    return len(path) >= len(bound)
+
+
+def _bounds(cut: Any) -> Optional[tuple]:
+    """``((dimension, hierarchy), lower, upper)`` of a point or range cut
+    (a path, or None for an open end), else None."""
+    from cubes_spark.query.cells import PointCut, RangeCut
+
+    key = (str(cut.dimension), str(cut.hierarchy))
+    if cut.invert:
+        return None
+    if isinstance(cut, PointCut):
+        return key, cut.path, cut.path
+    if isinstance(cut, RangeCut):
+        return key, cut.from_path or None, cut.to_path or None
+    return None
+
+
+def _inside(cut: Any, outer: Any) -> bool:
+    """Whether ``cut`` selects only members that ``outer`` selects.  A
+    cut's string names its hierarchy: one path can mean two members
+    under two hierarchies (``order:F`` is a status, ``order@priority:F``
+    a priority)."""
+    if str(cut) == str(outer):
+        return True
+    inner, bounds = _bounds(cut), _bounds(outer)
+    return bool(inner and bounds) and inner[0] == bounds[0] \
+        and _within(inner[1], bounds[1], -1) \
+        and _within(inner[2], bounds[2], 1)
+
+
+def _extended(cut: Any, delta: Any, levels: dict, dtypes: dict) -> Any:
+    """``cut`` grown by ``delta`` when ``delta`` starts one member after
+    ``cut``'s upper end, on a level stored as an integer column (no
+    member lies between the two); else ``cut``."""
+    from cubes_spark.query.cells import RangeCut
+
+    outer, inner = _bounds(cut), _bounds(delta)
+    if not (outer and inner) or outer[0] != inner[0] \
+            or not outer[2] or not inner[1]:
+        return cut
+    (key, lower, upper), start = outer, inner[1]
+    level = levels.get(key, [])[len(start) - 1:len(start)]
+    try:
+        adjacent = len(start) == len(upper) \
+            and list(map(str, start[:-1])) == list(map(str, upper[:-1])) \
+            and int(start[-1]) == int(upper[-1]) + 1
+    except (TypeError, ValueError):
+        adjacent = False
+    if not adjacent or not level or dtypes.get(safe_name(level[0])) \
+            not in ("tinyint", "smallint", "int", "bigint"):
+        return cut
+    return RangeCut(cut.dimension, lower, inner[2], cut.hierarchy)
 
 
 class _Ref:
@@ -152,18 +215,24 @@ class Cuboid:
     """Descriptor of a materialized aggregate at a fixed grain.
 
     ``column_dtypes`` (stored column name → Spark dtype string, as
-    recorded at materialization) gates the algebraic avg-from-partials
-    rewrite: it fires only when the stored sum partial is decimal, the
-    condition under which re-aggregated partials are bit-identical to
-    the direct computation.  Without it (hand-built descriptors) avg
-    conservatively falls back to the fact star."""
+    recorded at materialization) gates the avg derived from stored
+    model sums (:meth:`partials_for`): it fires only when the stored
+    sum passes :func:`~cubes_spark.functions.aggregates.exact_from_sums`,
+    the condition under which re-aggregated partials are bit-identical
+    to the direct computation.  Without it (hand-built descriptors) avg
+    conservatively falls back to the fact star.
+
+    ``cuts`` are the cuts of the cell a sliced cuboid was materialized
+    over: its files hold only that slice's facts, so :meth:`plan`
+    serves only requests whose cell lies inside each of them."""
 
     def __init__(self, path: str, attribute_refs: Sequence[str],
                  aggregates: Sequence[Any],
                  column_dtypes: Optional[dict] = None,
                  rows: Optional[int] = None,
                  partials: Optional[dict] = None,
-                 distinct_tables: Optional[dict] = None) -> None:
+                 distinct_tables: Optional[dict] = None,
+                 cuts: Optional[Sequence[Any]] = None) -> None:
         self.path = path
         self.attribute_refs = list(attribute_refs)
         self.aggregates = {a.name: a for a in aggregates}
@@ -182,6 +251,7 @@ class Cuboid:
         #: coarser grain (distinct-set union), where per-grain exact
         #: counts cannot re-aggregate
         self.distinct_tables = dict(distinct_tables or {})
+        self.cuts = list(cuts or [])
 
     def partials_for(self, aggregate: Any) -> Optional[tuple]:
         """Stored-partial recipe serving ``aggregate`` exactly at ANY
@@ -190,7 +260,8 @@ class Cuboid:
         else None.  Materialization-recorded partials (already
         exactness-gated at build time) win; an avg can also be derived
         from model-stored sum + count_nonempty aggregates of the same
-        measure when their stored sum is decimal."""
+        measure when their stored sum passes ``exact_from_sums`` (a
+        decimal sum keeps its measure's scale)."""
         recorded = self.partials.get(getattr(aggregate, "name", None))
         if recorded is not None:
             return tuple(recorded)
@@ -205,35 +276,32 @@ class Cuboid:
                 sum_name = stored.name
             elif stored.function == "count_nonempty":
                 count_name = stored.name
-        if not sum_name or not count_name:
-            return None
-        # exactness gate: decimal partial sums merge exactly; double
-        # partials would differ from the direct avg in the last ulp
-        if not self.column_dtypes.get(sum_name, "").startswith("decimal"):
+        if not sum_name or not count_name or not exact_from_sums(
+                "avg", self.column_dtypes.get(sum_name)):
             return None
         return "avg", sum_name, count_name
 
     @classmethod
     def materialize(cls, browser: Any, path: str, drilldown: Any,
                     aggregates: Optional[Sequence[str]] = None,
-                    mode: str = "overwrite", cell: Any = None) -> "Cuboid":
+                    cell: Any = None) -> "Cuboid":
         """Write the cuboid parquet (logical refs stored with ``__`` for
-        dots) and return its descriptor.  ``cell`` restricts the
-        materialized slice — the starting point of incremental
-        maintenance (:meth:`refresh`).  Post-aggregate calculators are
-        not stored: no grain change can re-aggregate them.
+        dots), replacing any files at ``path``, and return its
+        descriptor.  ``cell`` restricts the materialized slice — the
+        starting point of incremental maintenance (:meth:`refresh`) —
+        and is recorded on the descriptor (``cuts``).  Post-aggregate
+        calculators are not stored: no grain change can re-aggregate
+        them.
 
-        When the aggregate list contains an avg/variance/stddev of a
-        measure, hidden ``(sum, count[, sum-of-squares])`` partial
-        columns are computed IN THE SAME aggregation pass and recorded
-        on the descriptor (``self.partials``) — that is what lets the
-        rewriter serve those algebraic aggregates at coarser grains.
-        Partials that fail the exactness gate (non-decimal measure, or
-        scale > 6 for variance — the ``_exact_var`` condition) are
-        dropped before the write and not recorded: the direct
-        computation is order-dependent floating point there, so a
-        coarse-grain reconstruction could not match it bit-for-bit."""
-        from cubes_spark.functions.aggregates import _decimal_scale
+        An avg/variance/stddev that
+        :func:`~cubes_spark.functions.aggregates.exact_from_sums` passes
+        for its measure's dtype gets hidden ``(sum, count[,
+        sum-of-squares])`` partial columns, computed IN THE SAME
+        aggregation pass and recorded on the descriptor
+        (``self.partials``) — that is what lets the rewriter serve those
+        algebraic aggregates at coarser grains.  The others get none:
+        their direct computation is order-dependent floating point, so
+        no coarse-grain reconstruction could match it bit-for-bit."""
         from cubes_spark.functions.calculators import (
             CALCULATED_AGGREGATIONS,
         )
@@ -247,75 +315,50 @@ class Cuboid:
             if a.function not in CALCULATED_AGGREGATIONS
         ]
 
-        # -- partial requests: one (sum, count[, sumsq]) set per measure
-        # with an algebraic aggregate, reusing model-stored sum/count
+        # -- partials: one (sum, count[, sumsq]) set per measure with an
+        # exact algebraic aggregate, reusing model-stored sum/count
         # aggregates of the same measure when already in the list
         algebraic = [a for a in prepared
                      if a.function in ("avg", "variance", "stddev")
                      and a.measure]
+        measures = sorted({a.measure for a in algebraic})
+        context = browser.aggregation_context(measures)
+        measure_dtypes = dict(context.star.select(
+            *[context.column(m).alias(m) for m in measures]).dtypes)
         sums = {a.measure: a.name for a in prepared
                 if a.function == "sum" and a.measure}
         counts = {a.measure: a.name for a in prepared
                   if a.function == "count_nonempty" and a.measure}
         sumsqs: dict = {}
         synthetic: List[Any] = []
-        owned: set = set()
-        for m in sorted({a.measure for a in algebraic}):
-            if m not in sums:
-                name = f"__psum__{m}"
-                synthetic.append(MeasureAggregate(
-                    name=name, function="sum", measure=m))
-                sums[m] = name
-                owned.add(name)
-            if m not in counts:
-                name = f"__pcount__{m}"
-                synthetic.append(MeasureAggregate(
-                    name=name, function="count_nonempty", measure=m))
-                counts[m] = name
-                owned.add(name)
-        for m in sorted({a.measure for a in algebraic
-                         if a.function in ("variance", "stddev")}):
-            name = f"__psumsq__{m}"
-            # squared at native decimal precision — the exact expression
-            # the direct path sums (functions/aggregates.py _exact_var)
-            synthetic.append(MeasureAggregate(
-                name=name, expression=f"sum({m} * {m})"))
-            sumsqs[m] = name
-            owned.add(name)
+
+        def partial(known: dict, m: str, name: str, **spec: Any) -> str:
+            if m not in known:
+                synthetic.append(MeasureAggregate(name=name, **spec))
+                known[m] = name
+            return known[m]
+
+        partials: dict = {}
+        for a in algebraic:
+            m = a.measure
+            if not exact_from_sums(a.function, measure_dtypes[m]):
+                continue
+            s = partial(sums, m, f"__psum__{m}", function="sum", measure=m)
+            c = partial(counts, m, f"__pcount__{m}",
+                        function="count_nonempty", measure=m)
+            if a.function == "avg":
+                partials[a.name] = ("avg", s, c)
+            else:
+                # squared at native decimal precision — the exact
+                # expression the direct path sums (_exact_var)
+                q = partial(sumsqs, m, f"__psumsq__{m}",
+                            expression=f"sum({m} * {m})")
+                partials[a.name] = (a.function, s, c, q)
 
         df = browser._aggregation_plan(
             cell, prepared + synthetic, dd, None)
         safe = safe_columns(df)
-        dtypes = {c: t for c, t in safe.dtypes}
-
-        # -- exactness gate per algebraic aggregate; keep only partial
-        # columns a gated recipe references
-        partials: dict = {}
-        keep: set = set()
-        for a in algebraic:
-            s, c = sums[a.measure], counts[a.measure]
-            s_dtype = dtypes.get(_safe(s), "")
-            if a.function == "avg":
-                if not s_dtype.startswith("decimal"):
-                    continue
-                partials[a.name] = ("avg", s, c)
-            else:
-                q = sumsqs[a.measure]
-                ps = _decimal_scale(s_dtype)  # sum preserves the scale
-                if not ps or ps[1] > 6 \
-                        or not dtypes.get(_safe(q), "").startswith(
-                            "decimal"):
-                    continue
-                partials[a.name] = (a.function, s, c, q)
-                keep.add(q)
-            keep.add(s)
-            keep.add(c)
-        drop = owned - keep
-        if drop:
-            safe = safe.drop(*[_safe(n) for n in drop])
-            dtypes = {c: t for c, t in safe.dtypes}
-
-        _write(safe, path, mode)
+        _write(safe, path)
         refs = [a.ref for a in dd.all_attributes]
         spark = df.sparkSession
 
@@ -333,20 +376,20 @@ class Cuboid:
             context = browser.aggregation_context(
                 set(refs) | {a.measure} | cell_refs)
             proj = context.filtered_star(cell).select(
-                *[context.column(r).alias(_safe(r)) for r in refs],
+                *[context.column(r).alias(safe_name(r)) for r in refs],
                 context.column(a.measure).alias("__key__"))
-            _write(proj.distinct(), sub, mode)
+            _write(proj.distinct(), sub)
             distinct_tables[a.name] = sub
 
         # metadata-only count over the written files (row-group stats)
         rows = _read(spark, path).count()
-        recorded = [a.name for a in prepared] + sorted(
-            n for n in owned - drop)
+        written = dict(safe.dtypes)
         return cls(path, refs, prepared,
-                   column_dtypes={n: dtypes[_safe(n)] for n in recorded
-                                  if _safe(n) in dtypes},
+                   column_dtypes={a.name: written[safe_name(a.name)]
+                                  for a in prepared + synthetic
+                                  if safe_name(a.name) in written},
                    rows=rows, partials=partials,
-                   distinct_tables=distinct_tables)
+                   distinct_tables=distinct_tables, cuts=cell.cuts)
 
     def refresh(self, browser: Any, delta_cell: Any = None) -> None:
         """INCREMENTAL maintenance: aggregate only the ``delta_cell``
@@ -358,7 +401,10 @@ class Cuboid:
         is checkpointed off the source files before it overwrites
         ``self.path``.  The delta must be DISJOINT from what the cuboid
         covers (overlapping rows double-count); ``rows`` keeps its
-        materialization-time value."""
+        materialization-time value.  A delta that starts one member
+        after a one-cut slice's upper end extends the slice
+        (:func:`_extended`); any other delta leaves it as it was, which
+        serves less than the cuboid holds but never more."""
         from types import SimpleNamespace
 
         from cubes_spark.errors import ArgumentError
@@ -384,33 +430,41 @@ class Cuboid:
         # reads of its drilldown
         grain = SimpleNamespace(
             all_attributes=[_Ref(r) for r in self.attribute_refs])
+        cell = browser.prepare_cell(delta_cell)
         delta = browser._fact_only()._aggregation_plan(
-            browser.prepare_cell(delta_cell),
-            list(self.aggregates.values()), grain, None)
+            cell, list(self.aggregates.values()), grain, None)
         existing = _read(delta.sparkSession, self.path)
         keys = [c for c in existing.columns if c not in merge_fns]
         merged = (
             existing.unionByName(
                 safe_columns(delta).select(*existing.columns))
-            .groupBy(*[_col(c) for c in keys])
-            .agg(*[fn(_col(name)).alias(name)
+            .groupBy(*[ref_col(c) for c in keys])
+            .agg(*[fn(ref_col(name)).alias(name)
                    for name, fn in merge_fns.items()])
             .select(*existing.columns)
             .localCheckpoint(eager=True)
         )
         _write(merged, self.path)
+        if len(self.cuts) == len(cell.cuts) == 1:
+            self.cuts = [_extended(self.cuts[0], cell.cuts[0],
+                                   browser.hierarchies, dict(merged.dtypes))]
 
     def plan(self, browser: Any, cell: Any, aggregates: Sequence[Any],
              drilldown: Any) -> Optional[Any]:
         """The browser's aggregation rewritten against this cuboid: a
         DataFrame of the drilldown refs and the aggregates that are not
         post-calculated, or None when the cuboid does not cover the
-        request."""
+        request — also when it holds a slice (``cuts``) that does not
+        hold the request's cell."""
         from cubes_spark.functions.aggregates import variance_from_sums
         from cubes_spark.functions.calculators import (
             CALCULATED_AGGREGATIONS,
         )
 
+        # a sliced cuboid holds only its slice's facts: each cut of the
+        # slice must hold a cut of the request
+        if not all(any(_inside(c, s) for c in cell.cuts) for s in self.cuts):
+            return None
         storable = [
             a for a in aggregates
             if a.function not in CALCULATED_AGGREGATIONS
@@ -439,15 +493,15 @@ class Cuboid:
                 needed += [n for n in names if n not in needed]
         projected = df.select(
             *[context.column(ref).alias(ref) for ref in dd_refs],
-            *[_col(n) for n in needed])
+            *[ref_col(n) for n in needed])
         main_cols = []
         for name, (kind, *args) in main.items():
             if kind == "stored":
-                expr = args[0](_col(name))
+                expr = args[0](ref_col(name))
             elif kind == "avg":
                 s_name, c_name = args
-                expr = (F.sum(_col(s_name)).cast("double")
-                        / F.sum(_col(c_name)).cast("double"))
+                expr = (F.sum(ref_col(s_name)).cast("double")
+                        / F.sum(ref_col(c_name)).cast("double"))
             else:
                 # variance/stddev from merged (sum, count, sum²)
                 # partials — same formula over the same exact decimal
@@ -455,14 +509,14 @@ class Cuboid:
                 # (functions/aggregates.py)
                 s_name, c_name, q_name = args
                 var = variance_from_sums(
-                    F.sum(_col(c_name)),
-                    F.sum(_col(s_name)).cast("double"),
-                    F.sum(_col(q_name)).cast("double"),
+                    F.sum(ref_col(c_name)),
+                    F.sum(ref_col(s_name)).cast("double"),
+                    F.sum(ref_col(q_name)).cast("double"),
                 )
                 expr = var if kind == "variance" else F.sqrt(var)
             main_cols.append(expr.alias(name))
         if dd_refs:
-            grouped = projected.groupBy(*[_col(r) for r in dd_refs])
+            grouped = projected.groupBy(*[ref_col(r) for r in dd_refs])
             out = grouped.agg(*main_cols) if main_cols \
                 else grouped.count().drop("count")
         else:
@@ -476,21 +530,21 @@ class Cuboid:
                 browser, _read(raw.sparkSession, sub), cell)
             d_proj = d_df.select(
                 *[d_ctx.column(ref).alias(ref) for ref in dd_refs],
-                _col("__key__"))
-            d_expr = F.count_distinct(_col("__key__")).alias(name)
+                ref_col("__key__"))
+            d_expr = F.count_distinct(ref_col("__key__")).alias(name)
             if dd_refs:
                 d_out = d_proj.groupBy(
-                    *[_col(r) for r in dd_refs]).agg(d_expr)
+                    *[ref_col(r) for r in dd_refs]).agg(d_expr)
                 out = out.join(d_out, list(dd_refs), "left")
             else:
                 out = out.crossJoin(d_proj.agg(d_expr))
             # a group whose companion slice is empty has zero distinct
             # keys — count_distinct semantics, not NULL
             out = out.withColumn(
-                name, F.coalesce(_col(name), F.lit(0).cast("long")))
+                name, F.coalesce(ref_col(name), F.lit(0).cast("long")))
         if companions:
-            out = out.select(*[_col(r) for r in dd_refs],
-                             *[_col(n) for n in recipes])
+            out = out.select(*[ref_col(r) for r in dd_refs],
+                             *[ref_col(n) for n in recipes])
         return out
 
     def _filtered(self, browser: Any, raw: Any, cell: Any) -> tuple:
@@ -502,7 +556,7 @@ class Cuboid:
         )
 
         mappings = {
-            ref: ColumnRef(None, "cuboid", _safe(ref), None, None, None)
+            ref: ColumnRef(None, "cuboid", safe_name(ref), None, None, None)
             for ref in self.attribute_refs
         }
         star = StarSchema("cuboid", "cuboid", raw, mappings=mappings)
@@ -511,27 +565,17 @@ class Cuboid:
             hierarchies=browser.hierarchies)
         return context, context.filtered_star(cell)
 
-    def covers(self, attribute_refs: Sequence[str],
-               aggregates: Sequence[Any],
-               requested_grain_refs: Sequence[str],
-               allow_partials: bool = True) -> bool:
-        """Can this cuboid serve a query touching ``attribute_refs``
-        (drilldown + cell attributes) with ``aggregates``?
-
-        ``allow_partials=False`` serves stored columns only, neither
-        partials nor companion tables (the browser passes this under
-        ``coalesce_measures``, where avg ≠ sum/count_nonempty)."""
-        return self._recipes(attribute_refs, aggregates,
-                             requested_grain_refs,
-                             allow_partials) is not None
-
     def _recipes(self, attribute_refs: Sequence[str],
                  aggregates: Sequence[Any],
                  requested_grain_refs: Sequence[str],
                  allow_partials: bool) -> Optional[dict]:
         """Aggregate name → how this cuboid serves it (the one serving
-        decision of :meth:`covers` and :meth:`plan`), or None when some
-        touched ref is not in the grain or some aggregate has no recipe.
+        decision, taken by :meth:`plan`), or None when some touched ref
+        is not in the grain or some aggregate has no recipe.
+
+        ``allow_partials=False`` serves stored columns only, neither
+        partials nor companion tables (:meth:`plan` passes it under
+        ``coalesce_measures``, where avg ≠ sum/count_nonempty).
 
         A recipe is ``("stored", fn)`` — the stored column through
         ``F.first`` at the cuboid's own grain, through its
@@ -646,9 +690,9 @@ class StreamAggregateCuboid(Cuboid):
         from cubes_spark.streaming.stream import read_aggregate
 
         df = read_aggregate(spark, self.path, self.aggs)
-        cols = [_col(c).alias(_safe(ref))
+        cols = [ref_col(c).alias(safe_name(ref))
                 for ref, c in zip(self.attribute_refs, self.grain_cols)]
-        cols += [_col(n) for n in self.aggs]
+        cols += [ref_col(n) for n in self.aggs]
         return df.select(*cols)
 
 
@@ -688,8 +732,7 @@ class HLLCuboid:
     @classmethod
     def materialize(cls, browser: Any, path: str, drilldown: Any,
                     measure: str, m: int = 256, rank_bits: int = 40,
-                    salt: str = "hll",
-                    mode: str = "overwrite") -> "HLLCuboid":
+                    salt: str = "hll") -> "HLLCuboid":
         """ONE sketch pass over the fact star: project the grain
         attributes + measure, build per-(grain, bucket) max-rank
         registers (map-side combinable), write the register table."""
@@ -700,12 +743,12 @@ class HLLCuboid:
         refs = [a.ref for a in dd.all_attributes]
         context = browser.aggregation_context(set(refs) | {measure})
         projected = context.star.select(
-            *[context.column(r).alias(_safe(r)) for r in refs],
+            *[context.column(r).alias(safe_name(r)) for r in refs],
             context.column(measure).alias("__m__"))
         regs = hll_registers(projected, "__m__",
-                             group_cols=[_safe(r) for r in refs],
+                             group_cols=[safe_name(r) for r in refs],
                              m=m, rank_bits=rank_bits, salt=salt)
-        _write(regs, path, mode)
+        _write(regs, path)
         return cls(path, refs, measure, m=m, rank_bits=rank_bits,
                    salt=salt)
 
@@ -722,7 +765,7 @@ class HLLCuboid:
             raise ArgumentError(
                 f"HLL cuboid at grain {self.attribute_refs} cannot "
                 f"serve {list(keep_refs)}")
-        keep = [_safe(r) for r in keep_refs]
+        keep = [safe_name(r) for r in keep_refs]
         df = _read(spark, self.path)
         return (df.groupBy(*keep, "bucket")
                 .agg(F.max("register").cast("int").alias("register")))
@@ -735,7 +778,7 @@ class HLLCuboid:
 
         return hll_estimate(
             self.registers(spark, keep_refs),
-            group_cols=[_safe(r) for r in keep_refs],
+            group_cols=[safe_name(r) for r in keep_refs],
             m=self.m, rank_bits=self.rank_bits)
 
 
@@ -853,7 +896,7 @@ def advise_cuboids(browser: Any, drilldowns: Sequence[str],
         drilldown=dims, aggregates=aggregates)
     # logical refs contain dots — alias to SAFE names before the cube
     # pass (a dotted identifier parses as a struct field there)
-    safe_refs = [_safe(ref) for ref in refs]
+    safe_refs = [safe_name(ref) for ref in refs]
     sizes = {
         r["grouping_id"]: r["size"]
         for r in cuboid_sizes(

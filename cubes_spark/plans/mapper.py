@@ -10,6 +10,9 @@ from __future__ import annotations
 import re
 from typing import Any, Dict, Optional, Tuple
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
 from cubes_spark.metadata.attributes import Attribute
 from cubes_spark.metadata.cube import Cube
 from cubes_spark.plans.star import ColumnRef, to_column
@@ -21,7 +24,21 @@ __all__ = [
     "DenormalizedMapper",
     "map_base_attributes",
     "distill_naming",
+    "ref_col",
+    "safe_name",
 ]
+
+
+def safe_name(ref: str) -> str:
+    """``ref`` with dots as ``__``: logical refs contain dots, parquet
+    field names and view names cannot."""
+    return ref.replace(".", "__")
+
+
+def ref_col(ref: str) -> Column:
+    """Column by name, backtick-safe for dotted logical refs."""
+    return F.col(f"`{ref}`")
+
 
 NAMING_DEFAULTS = {
     "fact_prefix": None,
@@ -200,8 +217,7 @@ class DenormalizedMapper(Mapper):
         self.fact_name = cube.fact or naming.denormalized_table_name(cube.name)
 
     def __getitem__(self, attribute: Any) -> ColumnRef:
-        column = attribute.ref.replace(".", "__")
-        return to_column((self.fact_name, column))
+        return to_column((self.fact_name, safe_name(attribute.ref)))
 
 
 def map_base_attributes(

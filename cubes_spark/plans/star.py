@@ -227,7 +227,7 @@ class StarSchema:
     `fact_df` is the fact DataFrame; `mappings` maps logical attribute
     refs to :class:`ColumnRef`; `joins` describe the (snow)flake;
     `table` returns the DataFrame of a detail table by name (a missing
-    table raises ``KeyError`` or the lookup's own error).
+    table raises the lookup's own error).
 
     `persisted` — optional callable returning the persisted star of
     this schema (see :meth:`persist_star`) or None; :meth:`get_star`
@@ -275,14 +275,9 @@ class StarSchema:
                 raise ModelError(
                     f"Duplicate table reference {alias} in star {label}"
                 )
-            try:
-                df = table(name)
-            except KeyError:
-                raise NoSuchTableError(
-                    f"No table '{name}' for star schema {label}"
-                )
-            self._tables[alias] = _TableRef(name=name, alias=alias,
-                                            df=df.alias(alias), join=join)
+            self._tables[alias] = _TableRef(
+                name=name, alias=alias, df=table(name).alias(alias),
+                join=join)
 
         self._column_cache: Dict[str, Column] = {}
 
@@ -517,7 +512,6 @@ class QueryContext:
         star_schema: StarSchema,
         attributes: Iterable,
         hierarchies: Optional[dict] = None,
-        parameters: Optional[dict] = None,
     ) -> None:
         self.star_schema = star_schema
         # materialize: a generator input would be exhausted by the
@@ -534,7 +528,7 @@ class QueryContext:
 
         # Compile columns in dependency order (parity: sql/expressions.py:123-150)
         self._columns: Dict[str, Column] = {}
-        compiler = SparkExpressionCompiler(self._columns, parameters)
+        compiler = SparkExpressionCompiler(self._columns)
         for attr in attributes:
             if getattr(attr, "function", None):
                 # aggregates with function are handled at aggregation time

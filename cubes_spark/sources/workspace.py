@@ -37,7 +37,7 @@ from cubes_spark.metadata.cube import Cube
 from cubes_spark.metadata.dimension import Dimension
 from cubes_spark.namespace import Namespace
 from cubes_spark.operators.browser import SparkBrowser
-from cubes_spark.plans.mapper import Naming, distill_naming
+from cubes_spark.plans.mapper import Naming, distill_naming, safe_name
 
 __all__ = ["Workspace", "ParquetStore", "read_model", "default_session",
            "session_config"]
@@ -875,7 +875,7 @@ class Workspace:
             browser = SparkBrowser(
                 cube, functools.partial(self.table, store=cube.store),
                 naming=self.naming)
-            view = prefix + name.replace(".", "__")
+            view = prefix + safe_name(name)
             safe_columns(browser.denormalized_dataframe()) \
                 .createOrReplaceTempView(view)
             names.append(view)

@@ -532,6 +532,132 @@ class TestVarFromPartials:
         assert "lineitem" in plan_of(df)
 
 
+#: measure → the functions the direct path computes from exact sums:
+#: decimal(20,2), decimal(25,7) (scale > 6) and a plain integer
+EXACT_FUNCTIONS = {
+    "extendedprice": {"avg", "variance", "stddev"},
+    "price7": {"avg"},
+    "linenumber": set(),
+}
+
+
+@pytest.fixture(scope="module")
+def exactness_ws(spark):
+    """The TPC-H workspace with a scale-7 decimal measure and an avg,
+    a variance and a stddev of each measure of EXACT_FUNCTIONS."""
+    import copy
+
+    from cubes_spark.demo import TPCH_MODEL
+    from cubes_spark.sources.workspace import Workspace
+
+    model = copy.deepcopy(TPCH_MODEL)
+    sales = next(c for c in model["cubes"] if c["name"] == "sales")
+    sales["measures"].append({"name": "price7"})
+    sales["mappings"]["price7"] = {
+        "table": "lineitem", "column": "l_extendedprice",
+        "cast": "decimal(25,7)"}
+    sales["aggregates"] += [
+        {"name": f"{function}_of_{measure}", "function": function,
+         "measure": measure}
+        for measure in EXACT_FUNCTIONS
+        for function in ("avg", "variance", "stddev")]
+    ws = Workspace(spark, store=SF_DIR)
+    ws.import_model(model)
+    return ws
+
+
+@pytest.mark.parametrize("measure", sorted(EXACT_FUNCTIONS))
+@pytest.mark.parametrize("function", ["avg", "variance", "stddev"])
+def test_partials_follow_the_exactness_rule(exactness_ws, spark, tmp_path,
+                                            function, measure):
+    """The cuboid stores and serves partials for exactly the aggregates
+    the direct path computes from exact sums (exact_from_sums); every
+    coarser-grain answer equals the fact star's."""
+    from cubes_spark.functions.aggregates import exact_from_sums
+
+    name = f"{function}_of_{measure}"
+    exact = function in EXACT_FUNCTIONS[measure]
+    b = exactness_ws.browser("sales")
+    dtype = dict(b.denormalized_dataframe(attributes=[measure]).dtypes)
+    assert exact_from_sums(function, dtype[measure]) is exact
+
+    cuboid = b.materialize_cuboid(
+        str(tmp_path / "cuboid"), drilldown=["date@ym:month"],
+        aggregates=[name, "fact_count"])
+    assert (name in cuboid.partials) is exact
+    hidden = [c for c in cuboid.load(spark).columns if c.startswith("__p")]
+    assert bool(hidden) is exact
+
+    df = b.aggregation_dataframe(drilldown=["date:year"], aggregates=[name])
+    assert ("lineitem" not in plan_of(df)) is exact
+    expect = b._fact_only().aggregation_dataframe(
+        drilldown=["date:year"], aggregates=[name])
+    assert sorted(map(str, df.collect())) \
+        == sorted(map(str, expect.collect()))
+
+
+class TestSlicedCuboid:
+    """A cuboid materialized over a cell's slice holds only that
+    slice's facts: it serves a request whose cell carries each cut of
+    the slice, and the fact star answers every other request."""
+
+    AGGREGATES = ["quantity_sum", "fact_count"]
+
+    @pytest.fixture()
+    def sliced(self, spark, tmp_path):
+        from cubes_spark.operators import olap
+
+        b = tpch_workspace(spark, SF_DIR).browser("sales")
+        b.add_cuboid(olap.materialize_aggregate(
+            b, str(tmp_path / "y1995"), drilldown=["date@ym:month"],
+            aggregates=self.AGGREGATES, cell="date:1995"))
+        return b
+
+    @pytest.mark.parametrize(
+        "cell", ["date:1996", None, "date:1995-1996", "!date:1996"])
+    def test_outside_the_slice_reads_the_facts(self, sliced, cell):
+        got = sliced.aggregate(cell=cell, aggregates=self.AGGREGATES)
+        want = sliced._fact_only().aggregate(
+            cell=cell, aggregates=self.AGGREGATES)
+        assert got.summary == want.summary
+        assert got.summary["fact_count"]
+
+    def test_the_slice_is_served_from_the_cuboid(self, sliced):
+        request = dict(cell="date:1995",
+                       drilldown=["date@ym:month"],
+                       aggregates=self.AGGREGATES)
+        df = sliced.aggregation_dataframe(**request)
+        assert "lineitem" not in plan_of(df)
+        expect = sliced._fact_only().aggregation_dataframe(**request)
+        assert sorted(map(str, df.collect())) \
+            == sorted(map(str, expect.collect()))
+
+    def test_same_path_in_another_hierarchy_reads_the_facts(
+            self, spark, tmp_path):
+        # "12" is a month under one hierarchy and a day under the other:
+        # the December cuboid holds few of the day-12 facts
+        import copy
+
+        from cubes_spark.demo import TPCH_MODEL
+        from cubes_spark.operators import olap
+        from cubes_spark.sources.workspace import Workspace
+
+        model = copy.deepcopy(TPCH_MODEL)
+        date = next(d for d in model["dimensions"] if d["name"] == "date")
+        date["hierarchies"] += [{"name": "md", "levels": ["month", "day"]},
+                                {"name": "dm", "levels": ["day", "month"]}]
+        ws = Workspace(spark, store=SF_DIR)
+        ws.import_model(model)
+        b = ws.browser("sales")
+        b.add_cuboid(olap.materialize_aggregate(
+            b, str(tmp_path / "december"), drilldown=["date:day"],
+            aggregates=self.AGGREGATES, cell="date@md:12"))
+        request = dict(cell="date@dm:12", aggregates=self.AGGREGATES)
+        got = b.aggregate(**request)
+        assert got.summary == b._fact_only().aggregate(**request).summary
+        assert got.summary["fact_count"]
+
+
 class TestStreamCuboid:
     """A maintain_aggregate partial log registered with the browser
     (StreamAggregateCuboid / browser.register_stream_cuboid) serves
