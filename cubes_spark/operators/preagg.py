@@ -12,8 +12,8 @@ full-grain cuboid (``create_cube_aggregate``, cubes/sql/store.py:
   cell and aggregates a cuboid covers is rewritten by
   :meth:`Cuboid.plan` to scan the smallest such cuboid, not the star.
   A cuboid materialized over a cell's slice records the cell's cuts
-  and serves only requests whose cell lies inside each of them (the
-  same cut, or a point or range within a range);
+  and serves only requests with a cut ``within`` each of them
+  (:meth:`~cubes_spark.query.cells.Cut.within`);
 * **refresh** — :meth:`Cuboid.refresh` merges the aggregate of a
   delta slice of new facts (``olap.refresh_aggregate`` is its entry);
 * **read** — every read of a cuboid table (:meth:`Cuboid.load`, a
@@ -130,62 +130,18 @@ def _read(spark: Any, path: str) -> Any:
     return spark.read.parquet(path)
 
 
-def _within(path: Optional[list], bound: Optional[list], end: int) -> bool:
-    """Whether every member under ``path`` is inside ``bound``, the lower
-    (``end`` -1) or upper (``end`` 1) path of a range; None is open."""
-    if bound is None:
-        return True
-    if path is None:
-        return False
-    for x, y in zip(map(str, path), map(str, bound)):
-        if x != y:
-            # digit strings of one width are the only members that
-            # order alike in a numeric and in a string level column
-            return len(x) == len(y) and x.isdigit() and y.isdigit() \
-                and (x < y) == (end == 1)
-    return len(path) >= len(bound)
-
-
-def _bounds(cut: Any) -> Optional[tuple]:
-    """``((dimension, hierarchy), lower, upper)`` of a point or range cut
-    (a path, or None for an open end), else None."""
-    from cubes_spark.query.cells import PointCut, RangeCut
-
-    key = (str(cut.dimension), str(cut.hierarchy))
-    if cut.invert:
-        return None
-    if isinstance(cut, PointCut):
-        return key, cut.path, cut.path
-    if isinstance(cut, RangeCut):
-        return key, cut.from_path or None, cut.to_path or None
-    return None
-
-
-def _inside(cut: Any, outer: Any) -> bool:
-    """Whether ``cut`` selects only members that ``outer`` selects.  A
-    cut's string names its hierarchy: one path can mean two members
-    under two hierarchies (``order:F`` is a status, ``order@priority:F``
-    a priority)."""
-    if str(cut) == str(outer):
-        return True
-    inner, bounds = _bounds(cut), _bounds(outer)
-    return bool(inner and bounds) and inner[0] == bounds[0] \
-        and _within(inner[1], bounds[1], -1) \
-        and _within(inner[2], bounds[2], 1)
-
-
 def _extended(cut: Any, delta: Any, levels: dict, dtypes: dict) -> Any:
     """``cut`` grown by ``delta`` when ``delta`` starts one member after
     ``cut``'s upper end, on a level stored as an integer column (no
     member lies between the two); else ``cut``."""
     from cubes_spark.query.cells import RangeCut
 
-    outer, inner = _bounds(cut), _bounds(delta)
-    if not (outer and inner) or outer[0] != inner[0] \
-            or not outer[2] or not inner[1]:
+    outer, inner = cut.bounds(), delta.bounds()
+    if not (outer and inner) or cut.hierarchy_key != delta.hierarchy_key \
+            or not outer[1] or not inner[0]:
         return cut
-    (key, lower, upper), start = outer, inner[1]
-    level = levels.get(key, [])[len(start) - 1:len(start)]
+    (lower, upper), start = outer, inner[0]
+    level = levels.get(cut.hierarchy_key, [])[len(start) - 1:len(start)]
     try:
         adjacent = len(start) == len(upper) \
             and list(map(str, start[:-1])) == list(map(str, upper[:-1])) \
@@ -195,7 +151,7 @@ def _extended(cut: Any, delta: Any, levels: dict, dtypes: dict) -> Any:
     if not adjacent or not level or dtypes.get(safe_name(level[0])) \
             not in ("tinyint", "smallint", "int", "bigint"):
         return cut
-    return RangeCut(cut.dimension, lower, inner[2], cut.hierarchy)
+    return RangeCut(cut.dimension, lower, inner[1], cut.hierarchy)
 
 
 class _Ref:
@@ -224,7 +180,7 @@ class Cuboid:
 
     ``cuts`` are the cuts of the cell a sliced cuboid was materialized
     over: its files hold only that slice's facts, so :meth:`plan`
-    serves only requests whose cell lies inside each of them."""
+    serves only requests with a cut ``within`` each of them."""
 
     def __init__(self, path: str, attribute_refs: Sequence[str],
                  aggregates: Sequence[Any],
@@ -463,7 +419,7 @@ class Cuboid:
 
         # a sliced cuboid holds only its slice's facts: each cut of the
         # slice must hold a cut of the request
-        if not all(any(_inside(c, s) for c in cell.cuts) for s in self.cuts):
+        if not all(any(c.within(s) for c in cell.cuts) for s in self.cuts):
             return None
         storable = [
             a for a in aggregates
@@ -752,16 +708,13 @@ class HLLCuboid:
         return cls(path, refs, measure, m=m, rank_bits=rank_bits,
                    salt=salt)
 
-    def covers(self, keep_refs: Sequence[str]) -> bool:
-        return set(keep_refs) <= set(self.attribute_refs)
-
     def registers(self, spark: Any,
                   keep_refs: Sequence[str]):
         """Registers max-merged to the coarser ``keep_refs`` grain —
         identical to sketching the raw facts at that grain."""
         from cubes_spark.errors import ArgumentError
 
-        if not self.covers(keep_refs):
+        if not set(keep_refs) <= set(self.attribute_refs):
             raise ArgumentError(
                 f"HLL cuboid at grain {self.attribute_refs} cannot "
                 f"serve {list(keep_refs)}")

@@ -4,6 +4,12 @@ Parity: /root/reference/cubes/query/cells.py — Cell 36-464, cuts
 736-931, string grammar 466-733.  This is the public query language;
 semantics (escaping, ``__null__``, invert, ``dim@hierarchy`` spec)
 are preserved verbatim.
+
+A cut owns what it selects.  Its identity (``==`` and ``hash``) is its
+type, dimension, hierarchy — a cut that names none addresses its
+dimension's default — ``invert`` and path text; :meth:`Cut.within` is
+the one containment rule: equal cuts, or a point or range whose
+interval lies inside another's in the same hierarchy.
 """
 
 from __future__ import annotations
@@ -133,7 +139,12 @@ def string_from_cuts(cuts: Iterable) -> str:
 
 
 class Cut:
-    """Abstract cell cut (parity: cells.py:736-766)."""
+    """Abstract cell cut (parity: cells.py:736-766).
+
+    The path text of a cut's identity is the text :meth:`__str__` writes
+    after the colon; ``hidden`` is not part of it.  A hierarchy of None
+    is the default one when ``dimension`` is a ``Dimension``, so
+    ``date:1995`` equals ``date@default:1995``."""
 
     def __init__(self, dimension: Any, hierarchy: Any = None,
                  invert: bool = False, hidden: bool = False) -> None:
@@ -155,11 +166,73 @@ class Cut:
     def level_depth(self) -> int:
         raise NotImplementedError
 
+    def _path_string(self) -> str:
+        """The members this cut selects in the cut-string grammar."""
+        raise NotImplementedError
+
+    @property
+    def hierarchy_key(self) -> tuple:
+        """``(dimension name, hierarchy name)`` of the hierarchy this
+        cut's paths address (None: the default of a dimension named by
+        a string)."""
+        hierarchy = self.hierarchy or getattr(
+            self.dimension, "default_hierarchy_name", None)
+        return str(self.dimension), str(hierarchy) if hierarchy else None
+
+    def bounds(self) -> Optional[tuple]:
+        """``(lower, upper)`` paths of the one interval of members this
+        cut selects (None for an open end), or None when it selects no
+        single interval (a set cut, an inverted cut)."""
+        return None
+
+    def within(self, outer: "Cut") -> bool:
+        """Whether every member this cut selects is selected by
+        ``outer``: the two are equal, or both select an interval of one
+        hierarchy and this one lies inside the other.  One path can mean
+        two members under two hierarchies (``order:F`` is a status,
+        ``order@priority:F`` a priority)."""
+        if self == outer:
+            return True
+        inner, bounds = self.bounds(), outer.bounds()
+        return bool(inner and bounds) \
+            and self.hierarchy_key == outer.hierarchy_key \
+            and _path_within(inner[0], bounds[0], -1) \
+            and _path_within(inner[1], bounds[1], 1)
+
+    def _identity(self) -> tuple:
+        return (type(self), *self.hierarchy_key, self.invert,
+                self._path_string())
+
+    def __eq__(self, other: Any) -> bool:
+        return isinstance(other, Cut) and self._identity() == other._identity()
+
+    def __hash__(self) -> int:
+        return hash(self._identity())
+
+    def __str__(self) -> str:
+        dim_str = string_from_hierarchy(self.dimension, self.hierarchy)
+        return ("!" if self.invert else "") + dim_str + \
+            DIMENSION_STRING_SEPARATOR_CHAR + self._path_string()
+
     def __repr__(self) -> str:
         return str(self.to_dict())
 
-    def __ne__(self, other: Any) -> bool:
-        return not self.__eq__(other)
+
+def _path_within(path: Optional[list], bound: Optional[list],
+                 end: int) -> bool:
+    """Whether every member under ``path`` is inside ``bound``, the lower
+    (``end`` -1) or upper (``end`` 1) path of a range; None is open."""
+    if bound is None:
+        return True
+    if path is None:
+        return False
+    for x, y in zip(map(str, path), map(str, bound)):
+        if x != y:
+            # digit strings of one width are the only members that
+            # order alike in a numeric and in a string level column
+            return len(x) == len(y) and x.isdigit() and y.isdigit() \
+                and (x < y) == (end == 1)
+    return len(path) >= len(bound)
 
 
 class PointCut(Cut):
@@ -179,23 +252,11 @@ class PointCut(Cut):
     def level_depth(self) -> int:
         return len(self.path)
 
-    def __str__(self) -> str:
-        path_str = string_from_path(self.path)
-        dim_str = string_from_hierarchy(self.dimension, self.hierarchy)
-        string = ("!" if self.invert else "") + dim_str + \
-            DIMENSION_STRING_SEPARATOR_CHAR + path_str
-        return string
+    def _path_string(self) -> str:
+        return string_from_path(self.path)
 
-    def __eq__(self, other: Any) -> bool:
-        return (
-            isinstance(other, PointCut)
-            and str(self.dimension) == str(other.dimension)
-            and self.path == other.path
-            and self.invert == other.invert
-        )
-
-    def __hash__(self) -> int:
-        return hash(str(self))
+    def bounds(self) -> Optional[tuple]:
+        return None if self.invert else (self.path, self.path)
 
 
 class RangeCut(Cut):
@@ -219,25 +280,13 @@ class RangeCut(Cut):
     def level_depth(self) -> int:
         return max(len(self.from_path or []), len(self.to_path or []))
 
-    def __str__(self) -> str:
-        from_str = string_from_path(self.from_path) if self.from_path else ""
-        to_str = string_from_path(self.to_path) if self.to_path else ""
-        range_str = from_str + RANGE_CUT_SEPARATOR_CHAR + to_str
-        dim_str = string_from_hierarchy(self.dimension, self.hierarchy)
-        return ("!" if self.invert else "") + dim_str + \
-            DIMENSION_STRING_SEPARATOR_CHAR + range_str
+    def _path_string(self) -> str:
+        return string_from_path(self.from_path) \
+            + RANGE_CUT_SEPARATOR_CHAR + string_from_path(self.to_path)
 
-    def __eq__(self, other: Any) -> bool:
-        return (
-            isinstance(other, RangeCut)
-            and str(self.dimension) == str(other.dimension)
-            and self.from_path == other.from_path
-            and self.to_path == other.to_path
-            and self.invert == other.invert
-        )
-
-    def __hash__(self) -> int:
-        return hash(str(self))
+    def bounds(self) -> Optional[tuple]:
+        return None if self.invert \
+            else (self.from_path or None, self.to_path or None)
 
 
 class SetCut(Cut):
@@ -257,24 +306,10 @@ class SetCut(Cut):
     def level_depth(self) -> int:
         return max(len(path) for path in self.paths) if self.paths else 0
 
-    def __str__(self) -> str:
-        set_str = SET_CUT_SEPARATOR_CHAR.join(
+    def _path_string(self) -> str:
+        return SET_CUT_SEPARATOR_CHAR.join(
             string_from_path(path) for path in self.paths
         )
-        dim_str = string_from_hierarchy(self.dimension, self.hierarchy)
-        return ("!" if self.invert else "") + dim_str + \
-            DIMENSION_STRING_SEPARATOR_CHAR + set_str
-
-    def __eq__(self, other: Any) -> bool:
-        return (
-            isinstance(other, SetCut)
-            and str(self.dimension) == str(other.dimension)
-            and self.paths == other.paths
-            and self.invert == other.invert
-        )
-
-    def __hash__(self) -> int:
-        return hash(str(self))
 
 
 # ---------------------------------------------------------------------------
@@ -605,9 +640,6 @@ class Cell:
             and str(self.cube) == str(other.cube)
             and self.cuts == other.cuts
         )
-
-    def __ne__(self, other: Any) -> bool:
-        return not self.__eq__(other)
 
     def to_str(self) -> str:
         return string_from_cuts(self.cuts)

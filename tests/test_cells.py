@@ -139,3 +139,22 @@ def test_level_depths(cube):
     depths = cell.level_depths()
     assert depths["date"] == 2
     assert depths["geo"] == 1
+
+
+def test_cut_identity_names_its_hierarchy(cube):
+    # one path under two hierarchies selects two different members
+    for make in (lambda h: PointCut("date", ["12"], h),
+                 lambda h: RangeCut("date", ["1"], ["12"], h),
+                 lambda h: SetCut("date", [["1"], ["12"]], h)):
+        md, dm = make("md"), make("dm")
+        assert md != dm
+        assert len({md, dm}) == 2
+        assert Cell(cube, [md]) != Cell(cube, [dm])
+    # a cut that names no hierarchy addresses the default one
+    parsed = cut_from_string("date:1995", cube)
+    bare = PointCut(cube.dimension("date"), ["1995"])
+    assert str(parsed) == "date@default:1995" and str(bare) == "date:1995"
+    assert parsed == bare
+    assert hash(parsed) == hash(bare)
+    assert len({parsed, bare}) == 1
+    assert Cell(cube, [parsed]) == Cell(cube, [bare])

@@ -632,6 +632,19 @@ class TestSlicedCuboid:
         assert sorted(map(str, df.collect())) \
             == sorted(map(str, expect.collect()))
 
+    def test_a_cut_naming_no_hierarchy_is_served_from_the_cuboid(
+            self, sliced):
+        # the /report payload shape: a cut dict with no hierarchy is
+        # the same cut as the parsed "date:1995" the slice recorded
+        request = dict(
+            cell=[{"type": "point", "dimension": "date", "path": ["1995"]}],
+            drilldown=["date@ym:month"], aggregates=self.AGGREGATES)
+        df = sliced.aggregation_dataframe(**request)
+        assert "lineitem" not in plan_of(df)
+        expect = sliced._fact_only().aggregation_dataframe(**request)
+        assert sorted(map(str, df.collect())) \
+            == sorted(map(str, expect.collect()))
+
     def test_same_path_in_another_hierarchy_reads_the_facts(
             self, spark, tmp_path):
         # "12" is a month under one hierarchy and a day under the other:
